@@ -546,12 +546,15 @@ class ComponentStore(StoreKernel):
         # +0.7 s per apply at sf0.1 while the un-hinted write already
         # landed 2-6 AQE-coalesced files). The fan-out risk the hint
         # guarded against is many PRODUCER tasks each writing a
-        # few-row file — so gate on the producer partition count
-        # (pre-AQE upper bound on writer tasks, one cheap planning
-        # pass): small patches write as-is with zero overhead; a patch
-        # produced by a wide scan (the 100 TB case) rebalances
-        # KEYLESS, letting AQE size partitions instead of funnelling
-        # through the constant key.
+        # few-row file — so gate on the producer partition count:
+        # small patches write as-is; a patch produced by a wide scan
+        # (the 100 TB case) rebalances KEYLESS, letting AQE size
+        # partitions instead of funnelling through the constant key.
+        # The gate is NOT free: under AQE, `.rdd.getNumPartitions()`
+        # resolves the adaptive final plan, which runs every exchange
+        # in the patch as a real job (the write below is a fresh
+        # query and runs them again), and it returns the
+        # post-coalesce partition count, not a pre-AQE upper bound.
         out = patch.withColumn("seq", F.lit(f"{seq:08d}"))
         cap = self.spark.sparkContext.defaultParallelism
         if out.rdd.getNumPartitions() > cap:

@@ -199,6 +199,22 @@ _SHINGLE_X_SQL = (
 _MIN_HASH_AGG_SQL = [
     f"min(({MH_A[i]} * x + {MH_B[i]}) % {MH_P}) AS h{i}" for i in range(MH_K)
 ]
+
+
+def _min_hash_agg_sql(n_bands: int, band_rows: int) -> list[str]:
+    """The first n_bands*band_rows min-hash aggregates. The hash family
+    has MH_K permutations; a wider banding must fail here, not slice
+    short and leave band structs naming columns that were never
+    computed."""
+    k = n_bands * band_rows
+    if k > MH_K:
+        raise ValueError(
+            f"n_bands * band_rows = {n_bands} * {band_rows} = {k} exceeds "
+            f"MH_K = {MH_K} min-hash permutations"
+        )
+    return _MIN_HASH_AGG_SQL[:k]
+
+
 _BAND_STRUCTS_SQL = ", ".join(
     "struct({j} AS band, concat_ws(',', {hs}) AS sig)".format(
         j=j,

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import text as TX
+from ..session_cache import replace
 from . import register
 from .common import T
 
@@ -748,9 +749,8 @@ def decontaminate_minhash(spark, sf_dir):
     for the candidate join. Train-side buckets wider than the cap are
     skipped (boilerplate territory — the exact-hash and 8-gram passes
     catch those), cap replicated in the oracle."""
-    from .llm import _MH_BANDS, _MH_BUCKET_CAP, _MH_ROWS, _swap_cached
+    from .llm import _MH_BANDS, _MH_BUCKET_CAP, _MH_ROWS
 
-    k = _MH_BANDS * _MH_ROWS
     ws = F.split("text", " ", -1)
     shingles = F.array_distinct(
         F.transform(
@@ -775,17 +775,14 @@ def decontaminate_minhash(spark, sf_dir):
     # strings parse in one JVM call per list instead of ~300 py4j
     # round-trips — see operators/minhash_index.py's note. Same
     # expressions, same literals.
-    from ..operators.minhash_index import (
-        _BAND_STRUCTS_SQL,
-        _MIN_HASH_AGG_SQL,
-    )
+    from ..operators.minhash_index import _BAND_STRUCTS_SQL, _min_hash_agg_sql
 
     sigs = tok.withColumn("x", x).groupBy("doc_id").agg(
         F.count("*").alias("nw"),
         F.collect_list("w").alias("shs"),
-        *[F.expr(s) for s in _MIN_HASH_AGG_SQL[:k]],
+        *[F.expr(s) for s in _min_hash_agg_sql(_MH_BANDS, _MH_ROWS)],
     )
-    sigs = _swap_cached(decontaminate_minhash, "_cached_sigs", sigs)
+    sigs = replace(spark, "decontaminate_minhash_sigs", sigs)
     buckets = sigs.selectExpr(
         "doc_id", f"explode(array({_BAND_STRUCTS_SQL})) AS bs"
     ).select("doc_id", "bs.band", "bs.sig")
@@ -1250,7 +1247,7 @@ def curation_pipeline_v2(spark, sf_dir):
         F.size(F.filter(ws, lambda w: w.isin(*_BLOCKLIST))).alias("n_bad"),
         F.round(quality * F.lit(1000000.0)).cast("bigint").alias("quality_ppm"),
     )
-    base = _swap_cached_cur(base)
+    base = replace(spark, "curation_pipeline_v2_base", base)
     train = base.filter(F.col("doc_id") >= 50)
     s1 = train.filter(F.col("n_bad") == 0)
     hist = s1.groupBy("quality_ppm").agg(F.count("*").alias("c"))
@@ -1321,12 +1318,6 @@ def curation_pipeline_v2(spark, sf_dir):
         .join(contaminated.withColumn("mc", F.lit(1)), "doc_id", "left")
         .select("doc_id", disp.alias("disposition"))
     )
-
-
-def _swap_cached_cur(df):
-    from .llm import _swap_cached
-
-    return _swap_cached(_swap_cached_cur, "_cached_base", df)
 
 
 @register(

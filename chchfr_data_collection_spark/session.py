@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .session_cache import memo
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 TABLES = (
@@ -84,32 +86,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     read would return): every action still scans the parquet, so no
     result or data is ever reused across runs. Fixture tables are
     immutable for the life of a session, which is what makes the memo
-    sound. Keyed on the SESSION OBJECT (weakly), not applicationId:
-    `spark.newSession()` shares one context/applicationId but carries
-    its own session state (confs, timezone), and a plan built under one
-    session must not serve another (round-15 ADVICE, low). Dead
-    sessions fall out of the WeakKeyDictionary automatically.
+    sound. The memo is session_cache's, which keys it on the session
+    object and drops it when the session stops.
     """
-    per_session = _TABLE_PLAN_CACHE.get(spark)
-    if per_session is None:
-        per_session = _TABLE_PLAN_CACHE[spark] = {}
-    key = (sf_dir, name)
-    hit = per_session.get(key)
-    if hit is not None:
-        return hit
-    if name == "events":
-        df = _load_events(spark, f"{sf_dir}/{name}.parquet")
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if len(per_session) >= 64:
-        per_session.clear()
-    per_session[key] = df
-    return df
 
+    def read():
+        if name == "events":
+            return _load_events(spark, f"{sf_dir}/{name}.parquet")
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-from weakref import WeakKeyDictionary as _WeakKeyDictionary  # noqa: E402
-
-_TABLE_PLAN_CACHE: _WeakKeyDictionary = _WeakKeyDictionary()
+    return memo(spark, ("load_table", sf_dir, name), read)
 
 
 _EVENTS_COLS = ("event_id", "ts", "user_id", "event_type", "value", "props")

@@ -2,11 +2,23 @@
 query at sf0.01, so the pushdown/broadcast/shuffle claims in SCALE.md
 are inspectable without running Spark.
 
-Usage: python scripts/dump_plans.py   (writes PLANS.md at the repo root)
+Usage:
+  python scripts/dump_plans.py
+      writes PLANS.md at the repo root
+  python scripts/dump_plans.py --entries NAME [NAME ...] --out DIR
+          --suffix SUFFIX [--sf-dir DIR]
+      writes DIR/<NAME>_<SUFFIX>.txt, the `.explain("formatted")` of
+      each named entry (fixtures default to $SPARK_GRAFT_SF_DIR). Run
+      it once in a before tree (SUFFIX=before) and once in an after
+      tree (SUFFIX=after), then diff the pairs against an
+      optimization's plan claims.
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import io
 import os
 import re
 import sys
@@ -14,7 +26,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from chchfr_data_collection_spark.queries import catalog
-from chchfr_data_collection_spark.session import get_spark
+from chchfr_data_collection_spark.session import DEFAULT_SF_DIR, get_spark
 
 SHOWCASE = [
     # query name -> the property the plan must show
@@ -74,7 +86,35 @@ SHOWCASE = [
 ]
 
 
+def dump_entries(entries, outdir: str, suffix: str, sf_dir: str) -> None:
+    os.makedirs(outdir, exist_ok=True)
+    spark = get_spark("plans_entries")
+    cat = catalog()
+    for name in entries:
+        df = cat[name].fn(spark, sf_dir)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
+            f.write(buf.getvalue())
+        print("dumped", name)
+    spark.stop()
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "--entries", nargs="+", help="dump these entries instead of PLANS.md"
+    )
+    ap.add_argument("--out", help="output dir for --entries")
+    ap.add_argument("--suffix", help="file-name suffix for --entries")
+    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR, help="fixture dir for --entries")
+    args = ap.parse_args()
+    if args.entries:
+        if not (args.out and args.suffix):
+            ap.error("--entries needs --out and --suffix")
+        dump_entries(args.entries, args.out, args.suffix, args.sf_dir)
+        return
     spark = get_spark("plans", shuffle_partitions=8)
     cat = catalog()
     out = [

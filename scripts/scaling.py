@@ -5,7 +5,7 @@ fixture scales and compute the growth exponent, flagging any entry
 whose time grows faster than its design contract predicts).
 
 Protocol: one shared session (the catalog's per-fixture caches key on
-(applicationId, sf_dir), so the three scales never share state), one
+(session, sf_dir), so the three scales never share state), one
 timed pass per (entry, sf) in ascending-sf order, forced through the
 noop sink (bench_full.py's convention). Fast entries are dominated by
 fixed job-submission overhead (~0.1-0.5 s), so the exponent is only

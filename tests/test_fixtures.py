@@ -149,3 +149,86 @@ def test_events_nonempty_and_bounded_ts(spark, sf_dir):
     assert 2000 <= row["lo"] <= row["hi"] <= 2100, (
         f"events.ts years [{row['lo']}, {row['hi']}] — unit mis-normalization"
     )
+
+
+# --- session_cache: the memo behind load_table and every fixture memo ---
+
+
+def test_session_memo_builds_once_under_concurrent_misses(spark):
+    """8 threads missing one key at once: `build` runs exactly once and
+    every caller gets its value (the catalog column-parity test fans
+    entries out over 8 threads that share fixture memos)."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from chchfr_data_collection_spark.session_cache import memo
+
+    calls = []
+    gate = threading.Barrier(8)
+    key = ("test_concurrent_miss", object())
+
+    def build():
+        calls.append(1)
+        time.sleep(0.2)  # hold the miss open while the others arrive
+        return object()
+
+    def get(_):
+        gate.wait(timeout=30)
+        return memo(spark, key, build)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the check-then-act finely
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            got = list(pool.map(get, range(8), timeout=60))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(calls) == 1
+    assert all(v is got[0] for v in got)
+
+
+def test_session_replace_unpersists_previous(spark):
+    """`replace` keeps one persisted copy per slot: the new handle is
+    cached, the previous one is released, and a memo entry still
+    holding the released handle is dropped with it."""
+    from chchfr_data_collection_spark.session_cache import memo, replace
+
+    first = replace(spark, "test_replace", spark.range(11).filter("id % 3 = 1"))
+    assert first.storageLevel.useMemory
+    holder_key = ("test_replace_holder", object())
+    assert memo(spark, holder_key, lambda: first) is first
+    second = replace(spark, "test_replace", spark.range(13).filter("id % 3 = 1"))
+    assert not (first.storageLevel.useMemory or first.storageLevel.useDisk)
+    assert second.storageLevel.useMemory
+    assert memo(spark, holder_key, lambda: "rebuilt") == "rebuilt"
+    second.unpersist()
+
+
+def test_session_memo_releases_stopped_sessions(spark):
+    """Entries of a session whose context has stopped are dropped on the
+    next call, so nothing pins a dead session's values."""
+    import gc
+    import weakref
+
+    from chchfr_data_collection_spark import session_cache
+
+    class _Context:
+        _jsc = "running"
+
+    class _Session:
+        def __init__(self):
+            self.sparkContext = _Context()
+
+    class _Value:
+        pass
+
+    fake = _Session()
+    ref = weakref.ref(session_cache.memo(fake, "fixture", _Value))
+    assert ref() is not None
+    fake.sparkContext._jsc = None  # what SparkContext.stop() does
+    session_cache.memo(spark, ("test_stopped_sweep", object()), object)
+    gc.collect()
+    assert ref() is None
+    assert fake not in session_cache._SESSIONS

@@ -46,7 +46,7 @@ from chchfr_data_collection_spark.operators.takedown import (
 )
 
 MODEL = settings(
-    max_examples=int(_os.environ.get("SPARK_GRAFT_MODEL_EXAMPLES", "5")),
+    max_examples=int(_os.environ.get("SPARK_GRAFT_MODEL_EXAMPLES", "10")),
     deadline=None,
     suppress_health_check=[
         HealthCheck.function_scoped_fixture,

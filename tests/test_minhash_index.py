@@ -41,6 +41,10 @@ def test_incremental_equals_batch_restriction(spark):
     )
     assert inc == _pairs(full)
     assert inc, "fixture produced no delta-touching near-dup pairs"
+    # a banding wider than the MH_K-permutation hash family must fail
+    # loudly instead of slicing the signature short
+    with pytest.raises(ValueError, match=r"n_bands \* band_rows .* MH_K"):
+        dedup_minhash_banded(spark, SF_DIR, n_bands=MH_BANDS + 1)
 
 
 def test_two_batch_replay_equals_single_probe(spark, tmp_path):

@@ -119,7 +119,7 @@ _dirs = itertools.count()
 import os as _os
 
 MODEL = settings(
-    max_examples=int(_os.environ.get("SPARK_GRAFT_MODEL_EXAMPLES", "5")),
+    max_examples=int(_os.environ.get("SPARK_GRAFT_MODEL_EXAMPLES", "10")),
     deadline=None,
     suppress_health_check=[
         HealthCheck.function_scoped_fixture,
