@@ -117,6 +117,17 @@ def l2sq_q(a: str, b: str) -> Column:
     return F.expr(l2sq_q_sql(a, b))
 
 
+def pos_array(pos: str, val: str) -> Column:
+    """Aggregate folding a group's long (pos, val) rows into the array
+    of `val` ordered by `pos` (collect_list(struct) -> array_sort ->
+    transform) — how centroids and codebook cells built position by
+    position become one broadcastable array row."""
+    return F.expr(
+        f"transform(array_sort(collect_list(struct({pos}, {val}))), "
+        f"s -> s.{val})"
+    )
+
+
 def dot_exact_sql(a: str, b: str) -> str:
     return _sum_agg_sql(
         f"zip_with({quantize_sql(a)}, {quantize_sql(b)}, (x, y) -> x * y)",

@@ -19,6 +19,18 @@ from pyspark.sql.window import Window as W
 from ..functions import text as TX
 from ..functions import vectors as V
 from ..session_cache import memo, replace
+from ..streaming.embeddings import (
+    PQ_C,
+    PQ_DIM,
+    PQ_M,
+    centroid_arrays,
+    pq_encode,
+    pq_encode_trained,
+    pq_seed_d2,
+    pq_subvectors,
+    train_centroids,
+    train_pq_codebook,
+)
 from . import register
 from .common import T, store_fixture
 
@@ -2381,7 +2393,9 @@ def _ivf_store_cached(spark, sf_dir):
 @register(
     "similarity_ivf_forget_probe",
     sql=_ivf_duck_forget("c.vec_id % 16 = 9"),
-    tags=("llm", "similarity", "ann", "ivf", "forget", "incremental"),
+    tags=(
+        "llm", "similarity", "ann", "ivf", "forget", "incremental", "fixture-write"
+    ),
 )
 def similarity_ivf_forget_probe(spark, sf_dir):
     """RIGHT-TO-BE-FORGOTTEN on the SEMANTIC serving index (round-10
@@ -2456,7 +2470,10 @@ def _ivf_view_topk(view, emb):
 @register(
     "similarity_ivf_store_snapshot_probe",
     sql=_ivf_duck_forget("c.vec_id % 16 = 9"),
-    tags=("llm", "similarity", "ann", "ivf", "forget", "store", "snapshot"),
+    tags=(
+        "llm", "similarity", "ann", "ivf", "forget", "store", "snapshot",
+        "fixture-write",
+    ),
 )
 def similarity_ivf_store_snapshot_probe(spark, sf_dir):
     """BACKUP/RESTORE on the semantic serving index: the persisted IVF
@@ -3236,77 +3253,11 @@ def embedding_kmeans_iter(
     step shape (broadcast centroids, aggregate partials); n_iter more
     rounds = n_iter more passes over the data, no state on the driver
     beyond the k*64 centroid relation. `checkpoint_dir` makes each
-    iteration's state executor-loss-proof (see _kmeans_centroids)."""
-    return _kmeans_centroids(spark, sf_dir, n_iter, checkpoint_dir)
-
-
-def _kmeans_centroids(
-    spark, sf_dir, n_iter: int = 2, checkpoint_dir: str | None = None
-):
-    """The Lloyd loop shared by embedding_kmeans_iter (emits the
-    centroid table) and similarity_ivf_trained (serves ANN from it).
-
-    The per-iteration centroid state is k*64 rows, so by default the
-    loop stays LAZY (Catalyst replans the whole chain — cheap at
-    n_iter=2 and the state is trivially recomputable). Pass
-    `checkpoint_dir` for long training runs at scale: each iteration's
-    centroid table then round-trips through parquet, so executor or
-    stage loss replays from the last iteration's files rather than
-    re-running every assignment pass since the start (round-9 verdict
-    item 5). Values are identical either way — the state is integer
-    and the materialization is exact."""
-    from ..operators.graph import materialize
-
+    iteration's state executor-loss-proof (see train_centroids)."""
     emb = T(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id", V.quantize("embedding").alias("qv")
     )
-    cent_pos = (
-        emb.filter(F.col("vec_id") < 8)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.posexplode("qv").alias("pos", "c_val"),
-        )
-        .withColumn("n_assigned", F.lit(0).cast("bigint"))
-    )
-    dist = V.l2sq_q("qv", "cv")
-    aw = W.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cent_id"))
-    for it in range(n_iter):
-        cent_arr = cent_pos.groupBy("cent_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c_val"))),
-                lambda s: s["c_val"],
-            ).alias("cv")
-        )
-        assign = (
-            emb.crossJoin(F.broadcast(cent_arr))
-            .select("vec_id", "qv", "cent_id", dist.alias("dist"))
-            .withColumn("rn", F.row_number().over(aw))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "qv", "cent_id")
-        )
-        upd = (
-            assign.select("cent_id", F.posexplode("qv").alias("pos", "q"))
-            .groupBy("cent_id", "pos")
-            .agg(
-                F.round(F.sum("q") / F.count("*")).cast("bigint").alias("new_val"),
-                F.count("*").alias("n"),
-            )
-        )
-        cent_pos = (
-            cent_pos.select("cent_id", "pos", "c_val")
-            .join(upd, ["cent_id", "pos"], "left")
-            .select(
-                "cent_id",
-                "pos",
-                F.coalesce("new_val", F.col("c_val")).alias("c_val"),
-                F.coalesce("n", F.lit(0)).cast("bigint").alias("n_assigned"),
-            )
-        )
-        if checkpoint_dir is not None:
-            cent_pos = materialize(
-                cent_pos, checkpoint_dir, f"kmeans-cent-{it % 2}"
-            )
-    return cent_pos.select("cent_id", "pos", "c_val", "n_assigned")
+    return train_centroids(emb, n_iter, checkpoint_dir)
 
 
 @register(
@@ -4397,11 +4348,7 @@ def dedup_duplicate_spans(spark, sf_dir):
         "pos",
         F.coalesce(F.col("dup1"), F.lit(0)).cast("bigint").alias("flag"),
     )
-    fl = flagged.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "flag"))), lambda s: s["flag"]
-        ).alias("flags")
-    )
+    fl = flagged.groupBy("doc_id").agg(V.pos_array("pos", "flag").alias("flags"))
     flags = F.col("flags")
     return fl.select(
         "doc_id",
@@ -4633,11 +4580,11 @@ def text_token_ids(spark, sf_dir):
 # --------------------------------------------- product-quantization ANN
 
 # PQ-ADC (Jégou et al., "Product Quantization for Nearest Neighbor
-# Search", TPAMI 2011): the 64-dim embedding splits into M_SUB=4
-# 16-dim subspaces; each subvector is encoded to its nearest of C=8
-# sub-centroids (deterministic codebook: the first C vectors'
+# Search", TPAMI 2011): the 64-dim embedding splits into PQ_M
+# PQ_DIM-dim subspaces; each subvector is encoded to its nearest of
+# PQ_C sub-centroids (deterministic codebook: the first PQ_C vectors'
 # subvectors, same convention as the IVF queries so the oracle can
-# reproduce the training for free). A database vector is then M_SUB
+# reproduce the training for free). A database vector is then PQ_M
 # small codes — 16x smaller than the raw floats — and query-time
 # Asymmetric Distance Computation scores a candidate as the sum of
 # precomputed (query-subvector -> centroid) distances looked up by the
@@ -4648,9 +4595,6 @@ def text_token_ids(spark, sf_dir):
 # 0.53): finer subspaces dominate, and the re-rank stage below restores
 # recall to 1.0 at L=128 — so the landed config keeps the 16x
 # compression and lets the shortlist pay for recall.
-_PQ_M = 16
-_PQ_DIM = 4
-_PQ_C = 16
 _PQ_NQ = 5
 _PQ_K = 3
 _PQ_L = 128
@@ -4666,13 +4610,13 @@ _PQ_L_FRAC = 4
 
 _PQ_CORE_DUCK = f"""
 cent AS (SELECT vec_id AS cent_id, embedding FROM embeddings
-         WHERE vec_id < {_PQ_C}),
+         WHERE vec_id < {PQ_C}),
 sd AS (
-  SELECT v.vec_id, c.cent_id, (t.i - 1) // {_PQ_DIM} AS j,
+  SELECT v.vec_id, c.cent_id, (t.i - 1) // {PQ_DIM} AS j,
     SUM(({_Q.format(e='v.embedding[t.i]')} - {_Q.format(e='c.embedding[t.i]')}) *
         ({_Q.format(e='v.embedding[t.i]')} - {_Q.format(e='c.embedding[t.i]')}))
       AS d2
-  FROM embeddings v, cent c CROSS JOIN range(1, {_PQ_M * _PQ_DIM + 1}) t(i)
+  FROM embeddings v, cent c CROSS JOIN range(1, {PQ_M * PQ_DIM + 1}) t(i)
   GROUP BY v.vec_id, c.cent_id, j),
 codes AS (
   SELECT vec_id, j, cent_id AS code FROM (
@@ -4724,50 +4668,38 @@ WHERE rn <= {_PQ_K}
 """
 
 
-def _pq_adc(spark, sf_dir):
-    """ADC candidate scores (qid, cid, adc_dist) — shared by the pure
-    PQ top-k and the re-ranked serving path."""
-    emb = T(spark, sf_dir, "embeddings", parallel=True)
+def _pq_seed_qd(emb):
+    """The query distance table (qid, code, j, d2) of the first _PQ_NQ
+    vectors against the seed codebook (the first PQ_C vectors), plus
+    that codebook (cent_id, cv)."""
     qv = V.quantize("embedding")
-    cent = emb.filter(F.col("vec_id") < _PQ_C).select(
-        F.col("vec_id").alias("cent_id"), qv.alias("qc")
+    cent = emb.filter(F.col("vec_id") < PQ_C).select(
+        F.col("vec_id").alias("cent_id"), qv.alias("cv")
     )
+    qd = pq_seed_d2(
+        emb.filter(F.col("vec_id") < _PQ_NQ).select("vec_id", qv.alias("qv")), cent
+    ).select(F.col("vec_id").alias("qid"), F.col("cent_id").alias("code"), "j", "d2")
+    return qd, cent
 
-    def sub_d2(j):
-        return F.expr(
-            f"aggregate(zip_with(slice(qv, {j * _PQ_DIM + 1}, {_PQ_DIM}), "
-            f"slice(qc, {j * _PQ_DIM + 1}, {_PQ_DIM}), "
-            "(x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), "
-            "(acc, v) -> acc + v)"
-        )
 
-    sd = (
-        emb.select("vec_id", qv.alias("qv"))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "cent_id",
-            F.posexplode(F.array(*[sub_d2(j) for j in range(_PQ_M)])).alias("j", "d2"),
-        )
-    )
-    wcode = W.partitionBy("vec_id", "j").orderBy("d2", "cent_id")
-    codes = (
-        sd.withColumn("rn", F.row_number().over(wcode))
-        .filter("rn = 1")
-        .select("vec_id", "j", F.col("cent_id").alias("code"))
-    )
-    qd = sd.filter(F.col("vec_id") < _PQ_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("cent_id").alias("code"),
-        "j",
-        "d2",
-    )
+def _adc_scores(codes, qd):
+    """Asymmetric distances (qid, cid, adc_dist): each candidate's
+    query distances (qd: qid, code, j, d2) summed over its codes
+    (vec_id, j, code), the query itself excluded."""
     return (
         codes.join(F.broadcast(qd), ["code", "j"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", F.col("vec_id").alias("cid"))
         .agg(F.sum("d2").alias("adc_dist"))
     )
+
+
+def _pq_adc(spark, sf_dir):
+    """ADC candidate scores (qid, cid, adc_dist) — shared by the pure
+    PQ top-k and the re-ranked serving path."""
+    emb = T(spark, sf_dir, "embeddings", parallel=True)
+    qd, cent = _pq_seed_qd(emb)
+    return _adc_scores(pq_encode(emb, cent), qd)
 
 
 @register(
@@ -4925,11 +4857,11 @@ def _pq_cb_trained_duck(n_iter: int = _PQT_ITER) -> str:
     parts = [
         f"""qposn AS (
       SELECT vec_id, t.i AS pos, {_Q.format(e='embedding[t.i]')} AS q
-      FROM embeddings CROSS JOIN range(1, {_PQ_M * _PQ_DIM + 1}) t(i)),
+      FROM embeddings CROSS JOIN range(1, {PQ_M * PQ_DIM + 1}) t(i)),
     sub AS (
-      SELECT vec_id, (pos - 1) // {_PQ_DIM} AS j, (pos - 1) % {_PQ_DIM} AS p, q
+      SELECT vec_id, (pos - 1) // {PQ_DIM} AS j, (pos - 1) % {PQ_DIM} AS p, q
       FROM qposn),
-    cb0 AS (SELECT j, vec_id AS code, p, q AS c_val FROM sub WHERE vec_id < {_PQ_C})"""
+    cb0 AS (SELECT j, vec_id AS code, p, q AS c_val FROM sub WHERE vec_id < {PQ_C})"""
     ]
     for it in range(1, n_iter + 1):
         p = it - 1
@@ -5001,72 +4933,29 @@ def _pq_trained_duck() -> str:
 
 def _pq_trained_adc(spark, sf_dir):
     """ADC candidate scores (qid, cid, adc_dist) over a TRAINED
-    codebook: per-subspace Lloyd iterations (the k-means loop of
-    _kmeans_centroids applied to each 4-dim subspace), then the same
-    encode/score shape as _pq_adc. Training is integer-exact (quantized
+    codebook: train_pq_codebook's per-subspace Lloyd iterations, the
+    corpus encoded against the result (pq_encode_trained), then
+    _adc_scores as in _pq_adc. Training is integer-exact (quantized
     distances, re-quantized means), so the oracle replays the codebook
     AND the serving bit-for-bit."""
     emb = T(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id", V.quantize("embedding").alias("qv")
     )
-    sub = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
-                lambda j: F.slice("qv", j * _PQ_DIM + 1, _PQ_DIM),
-            )
-        ).alias("j", "sv"),
-    )
     # the subvector relation feeds every training iteration, the encode
     # pass, and the query distance table — persist ONE copy
-    sub = replace(spark, "pq_trained_sub", sub)
-    cb = sub.filter(F.col("vec_id") < _PQ_C).select(
-        "j", F.col("vec_id").alias("code"), F.col("sv").alias("cv")
-    )
-    d2 = V.l2sq_q("sv", "cv")
-    aw = W.partitionBy("vec_id", "j").orderBy(F.asc("d2"), F.asc("code"))
-    for _ in range(_PQT_ITER):
-        assign = (
-            sub.join(F.broadcast(cb), "j")
-            .select("vec_id", "j", "code", "sv", d2.alias("d2"))
-            .withColumn("rn", F.row_number().over(aw))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "j", "code", "sv")
+    sub = replace(spark, "pq_trained_sub", pq_subvectors(emb))
+    cb = train_pq_codebook(sub, _PQT_ITER)
+    qd = (
+        sub.filter(F.col("vec_id") < _PQ_NQ)
+        .join(F.broadcast(cb), "j")
+        .select(
+            F.col("vec_id").alias("qid"),
+            "code",
+            "j",
+            V.l2sq_q("sv", "cv").alias("d2"),
         )
-        upd = (
-            assign.select("j", "code", F.posexplode("sv").alias("p", "q"))
-            .groupBy("j", "code", "p")
-            .agg(F.round(F.sum("q") / F.count("*")).cast("bigint").alias("nv"))
-        )
-        upd_arr = upd.groupBy("j", "code").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("p", "nv"))),
-                lambda s: s["nv"],
-            ).alias("nv_arr")
-        )
-        cb = cb.join(upd_arr, ["j", "code"], "left").select(
-            "j", "code", F.coalesce("nv_arr", F.col("cv")).alias("cv")
-        )
-    sd = (
-        sub.join(F.broadcast(cb), "j")
-        .select("vec_id", "j", "code", d2.alias("d2"))
     )
-    wcode = W.partitionBy("vec_id", "j").orderBy("d2", "code")
-    codes = (
-        sd.withColumn("rn", F.row_number().over(wcode))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "j", "code")
-    )
-    qd = sd.filter(F.col("vec_id") < _PQ_NQ).select(
-        F.col("vec_id").alias("qid"), "code", "j", "d2"
-    )
-    return (
-        codes.join(F.broadcast(qd), ["code", "j"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", F.col("vec_id").alias("cid"))
-        .agg(F.sum("d2").alias("adc_dist"))
-    )
+    return _adc_scores(pq_encode_trained(sub, cb), qd)
 
 
 @register(
@@ -5076,7 +4965,7 @@ def _pq_trained_adc(spark, sf_dir):
 )
 def similarity_pq_trained(spark, sf_dir):
     """PQ serving with a TRAINED codebook: 2 per-subspace Lloyd
-    iterations (seeded from the first {_PQ_C} vectors' slices — the
+    iterations (seeded from the first PQ_C vectors' slices — the
     ivf_trained pattern applied to each 4-dim subspace), ADC shortlist
     at FIXED L={_PQ_L}, exact re-rank top-{_PQ_K}.
 
@@ -5297,7 +5186,9 @@ def _pq_store_cached(spark, sf_dir):
 @register(
     "similarity_pq_forget_probe",
     sql=_pq_duck_forget("cv.vec_id % 16 = 9"),
-    tags=("llm", "similarity", "pq", "forget", "incremental", "store"),
+    tags=(
+        "llm", "similarity", "pq", "forget", "incremental", "store", "fixture-write"
+    ),
 )
 def similarity_pq_forget_probe(spark, sf_dir):
     """RIGHT-TO-BE-FORGOTTEN on the COMPRESSED serving index (round-11
@@ -5326,38 +5217,8 @@ def similarity_pq_forget_probe(spark, sf_dir):
         forget_id="takedown-9",
     )
     codes = store.read().select("vec_id", "j", "code")
-
-    qv = V.quantize("embedding")
-    cent = emb.filter(F.col("vec_id") < _PQ_C).select(
-        F.col("vec_id").alias("cent_id"), qv.alias("qc")
-    )
-
-    def sub_d2(j):
-        return F.expr(
-            f"aggregate(zip_with(slice(qv, {j * _PQ_DIM + 1}, {_PQ_DIM}), "
-            f"slice(qc, {j * _PQ_DIM + 1}, {_PQ_DIM}), "
-            "(x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), "
-            "(acc, v) -> acc + v)"
-        )
-
-    qd = (
-        emb.filter(F.col("vec_id") < _PQ_NQ)
-        .select(F.col("vec_id").alias("qid"), qv.alias("qv"))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "qid",
-            F.col("cent_id").alias("code"),
-            F.posexplode(F.array(*[sub_d2(j) for j in range(_PQ_M)])).alias(
-                "j", "d2"
-            ),
-        )
-    )
-    adc = (
-        codes.join(F.broadcast(qd), ["code", "j"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", F.col("vec_id").alias("cid"))
-        .agg(F.sum("d2").alias("adc_dist"))
-    )
+    qd, _ = _pq_seed_qd(emb)
+    adc = _adc_scores(codes, qd)
     wk = W.partitionBy("qid").orderBy("adc_dist", "cid")
     return (
         adc.withColumn("rank", F.row_number().over(wk))
@@ -5674,12 +5535,7 @@ def embedding_power_iteration(spark, sf_dir):
                 .alias("vv"),
             )
             .groupBy()
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos0", "vv"))),
-                    lambda st: st["vv"],
-                ).alias("v")
-            )
+            .agg(V.pos_array("pos0", "vv").alias("v"))
             # 1-row relation: localCheckpoint flattens the lineage so the
             # plan stays O(1) per iteration instead of doubling (same
             # trick as operators/graph.py's label propagation) — without
@@ -6670,26 +6526,20 @@ def ivf_store_retrain_recall_audit(spark, sf_dir):
 
 def _ivf_trained_ranked(spark, sf_dir, probes: int = 3):
     """Bulk TRAINED-centroid assignment with probe ranks (vec_id, qv,
-    n2, cent_id, arank <= probes): 2 Lloyd iterations then broadcast
-    ranking by exact squared-L2 — arank=1 is the classic assignment;
+    n2, cent_id, arank <= probes): train_centroids' 2 Lloyd iterations
+    then broadcast ranking by exact squared-L2 — arank=1 is the classic assignment;
     ranks 2..p are the multiprobe cells. Cached once per invocation
     keyed on (sf_dir-independent) probe depth — every current caller
     uses the default p=_SEMDEDUP_PROBES, and the cache stores the
     relation per p so a different depth never reads a stale slice;
     shared by similarity_ivf_trained, the trained audits, and the
     multiprobe SemDeDup."""
-    cent_pos = _kmeans_centroids(spark, sf_dir, 2)
-    cent_arr = cent_pos.groupBy("cent_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c_val"))),
-            lambda s: s["c_val"],
-        ).alias("cv")
-    )
     emb = T(spark, sf_dir, "embeddings", parallel=True).select(
         "vec_id",
         V.quantize("embedding").alias("qv"),
         V.dot_exact("embedding", "embedding").alias("n2"),
     )
+    cent_arr = centroid_arrays(train_centroids(emb.select("vec_id", "qv"), 2))
     dist = V.l2sq_q("qv", "cv")
     aw = W.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cent_id"))
     ranked = (
@@ -6719,7 +6569,8 @@ def _ivf_trained_assign(spark, sf_dir):
 )
 def similarity_ivf_trained(spark, sf_dir):
     """The PRODUCTION IVF path end-to-end: train centroids with 2 real
-    Lloyd iterations (embedding_kmeans_iter's loop), assign the corpus
+    Lloyd iterations (train_centroids, the loop embedding_kmeans_iter
+    emits), assign the corpus
     to the TRAINED centroids by exact squared-L2 (the k-means metric),
     then probe top-3 by exact quantized cosine within each query's
     cell — similarity_ivf_ann with the seed-vector stand-ins replaced

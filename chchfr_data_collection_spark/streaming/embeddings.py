@@ -100,14 +100,14 @@ def ivf_assign(batch: DataFrame, cent: DataFrame) -> DataFrame:
 
 def l2_assign(vecs_q: DataFrame, cent: DataFrame) -> DataFrame:
     """Nearest-TRAINED-centroid assignment: exact integer squared-L2
-    argmin (the k-means metric — a trained index serves the metric it
-    trained under) with the asc-cent_id tie-break, cos_c derived
-    against the ASSIGNED centroid. `vecs_q` carries (vec_id, qv, n2,
-    *extras); extras pass through — retrain() threads batch_id through
-    here, and the post-retrain append path feeds fresh arrivals. Same
-    arithmetic as queries.llm's _ivf_trained_ranked at rank 1, so a
-    migrated-or-appended store is bit-replayable by the kmeans-CTE
-    oracle."""
+    argmin (the metric train_centroids trains under — a trained index
+    serves the metric it trained under) with the asc-cent_id
+    tie-break, cos_c derived against the ASSIGNED centroid. `vecs_q`
+    carries (vec_id, qv, n2, *extras); extras pass through — retrain()
+    threads batch_id through here, and the post-retrain append path
+    feeds fresh arrivals. `cent` is centroid_arrays() plus cn2. A
+    migrated-or-appended store is bit-replayable by the
+    _kmeans_iter_duck oracle followed by the same argmin."""
     extras = [c for c in vecs_q.columns if c not in ("vec_id", "qv", "n2")]
     dist = V.l2sq_q("qv", "cv")
     dotvc = V.dot_q("qv", "cv")
@@ -251,9 +251,9 @@ class IvfAssignmentStore(BatchAppendStore):
         similarity_ivf_trained trains but never migrates the store).
 
         `embeddings` supplies the vectors (vec_id, embedding) — the
-        store holds assignments, not vectors. Training is the exact
-        integer Lloyd loop (train_centroids: quantized squared-L2,
-        re-quantized means, vec_id < 8 seeds), so the migrated store is
+        store holds assignments, not vectors. Training is train_centroids,
+        the exact integer Lloyd loop embedding_kmeans_iter and
+        similarity_ivf_trained also run, so the migrated store is
         bit-replayable by the _kmeans_iter_duck oracle; migration
         assigns by squared-L2 argmin (the k-means metric — trained
         indexes serve the metric they trained under; the bootstrap's
@@ -306,11 +306,9 @@ class IvfAssignmentStore(BatchAppendStore):
             try:
                 expected = vecs.count()
                 cells_before = self._leaf_cells()
-                cent = train_centroids(vecs.select("vec_id", "qv"), n_iter)
-                cent = cent.withColumn(
-                    "cn2",
-                    V.dot_q("cv", "cv"),
-                )
+                cent = centroid_arrays(
+                    train_centroids(vecs.select("vec_id", "qv"), n_iter)
+                ).withColumn("cn2", V.dot_q("cv", "cv"))
                 # materialize the k-row trained dim ONCE (guide §1.2:
                 # don't compute things twice): the Lloyd chain is lazy,
                 # so without this the staging write AND the centroid
@@ -429,61 +427,72 @@ def foreach_batch_ivf_assign(
     )
 
 
-def train_centroids(vecs: DataFrame, n_iter: int = 2) -> DataFrame:
-    """Lloyd's k-means over an arbitrary quantized-vector frame
-    (vec_id, qv) — the frame-generic twin of queries.llm's
-    _kmeans_centroids (same arithmetic: exact int64 squared-L2
-    distances, centroid means re-quantized via one IEEE double
-    division + round, empty clusters keep their previous centroid, the
-    fixed vec_id < 8 seed convention), so a retrained store's
-    assignment is bit-replayable by the _kmeans_iter_duck oracle.
-    Returns the trained centroid dim (cent_id, cv: array<bigint>).
+def train_centroids(
+    vecs: DataFrame, n_iter: int = 2, checkpoint_dir: str | None = None
+) -> DataFrame:
+    """Lloyd's k-means over a quantized-vector frame (vec_id, qv) — the
+    one IVF training loop, behind embedding_kmeans_iter,
+    similarity_ivf_trained and IvfAssignmentStore.retrain. Seeds are
+    the fixed vec_id < 8 vectors; distances are exact int64
+    squared-L2; each centroid update re-quantizes the mean via one IEEE
+    double division + round; empty clusters keep their previous
+    centroid. Every iteration's state is integer, so the
+    _kmeans_iter_duck oracle replays the loop bit-identically.
+
+    Returns the centroid table position by position (cent_id, pos,
+    c_val, n_assigned), n_assigned counting the last round's members;
+    centroid_arrays() folds it into the broadcastable (cent_id, cv)
+    dim.
 
     Distributed shape per iteration: broadcast cross join (k rows) +
     window argmin — one shuffle on vec_id; update is posexplode +
-    groupBy(cent_id, pos). n_iter more rounds = n_iter more passes; no
-    driver state beyond the k x 64 centroid relation."""
-    seeds = vecs.filter(F.col("vec_id") < 8)
-    cent_pos = seeds.select(
+    groupBy(cent_id, pos), which also counts the members. n_iter more
+    rounds = n_iter more passes; no driver state beyond the k x 64
+    centroid relation. The loop stays lazy by default (Catalyst replans
+    the chain — cheap at small n_iter); pass `checkpoint_dir` for long
+    runs at scale and each iteration's centroids round-trip through
+    parquet, so executor or stage loss replays from the last
+    iteration's files (values are identical either way)."""
+    from ..operators.graph import materialize
+
+    cent_pos = vecs.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cent_id"),
         F.posexplode("qv").alias("pos", "c_val"),
+        F.lit(0).cast("bigint").alias("n_assigned"),
     )
     dist = V.l2sq_q("qv", "cv")
     aw = W.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cent_id"))
-
-    def _arr(cp):
-        return cp.groupBy("cent_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c_val"))),
-                lambda st: st["c_val"],
-            ).alias("cv")
-        )
-
-    for _ in range(n_iter):
+    for it in range(n_iter):
         assign = (
-            vecs.crossJoin(F.broadcast(_arr(cent_pos)))
+            vecs.crossJoin(F.broadcast(centroid_arrays(cent_pos)))
             .select("vec_id", "qv", "cent_id", dist.alias("dist"))
             .withColumn("rn", F.row_number().over(aw))
             .filter(F.col("rn") == 1)
         )
         upd = (
-            assign.select("cent_id", F.posexplode("qv").alias("pos", "qval"))
+            assign.select("cent_id", F.posexplode("qv").alias("pos", "q"))
             .groupBy("cent_id", "pos")
             .agg(
-                F.round(
-                    F.sum("qval").cast("double") / F.count("*")
-                ).cast("bigint").alias("new_val")
+                F.round(F.sum("q") / F.count("*")).cast("bigint").alias("new_val"),
+                F.count("*").alias("n"),
             )
         )
-        cent_pos = (
-            cent_pos.join(upd, ["cent_id", "pos"], "left")
-            .select(
-                "cent_id",
-                "pos",
-                F.coalesce("new_val", "c_val").alias("c_val"),
-            )
+        cent_pos = cent_pos.join(upd, ["cent_id", "pos"], "left").select(
+            "cent_id",
+            "pos",
+            F.coalesce("new_val", F.col("c_val")).alias("c_val"),
+            F.coalesce("n", F.lit(0)).cast("bigint").alias("n_assigned"),
         )
-    return _arr(cent_pos)
+        if checkpoint_dir is not None:
+            cent_pos = materialize(
+                cent_pos, checkpoint_dir, f"kmeans-cent-{it % 2}"
+            )
+    return cent_pos
+
+
+def centroid_arrays(cent_pos: DataFrame) -> DataFrame:
+    """(cent_id, pos, c_val) -> (cent_id, cv: array<bigint>)."""
+    return cent_pos.groupBy("cent_id").agg(V.pos_array("pos", "c_val").alias("cv"))
 
 
 # -------------------------------------------------- PQ encode (insert path)
@@ -508,11 +517,11 @@ def pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pq_encode(batch: DataFrame, cent: DataFrame) -> DataFrame:
-    """Encode a batch of vectors to PQ codes: per subspace, the nearest
-    sub-centroid by integer-exact quantized L2 (asc-cent_id tie-break) —
-    identical arithmetic to similarity_pq_adc's encode stage, so the
-    streamed code table equals the batch-built one bit-for-bit."""
+def pq_seed_d2(vecs_q: DataFrame, cent: DataFrame) -> DataFrame:
+    """Per subspace j, the exact integer squared-L2 from each quantized
+    vector (vec_id, qv) to the same slice of every seed-codebook row
+    (cent_id, cv): (vec_id, cent_id, j, d2). Encoding takes its argmin;
+    ADC queries sum it over a candidate's codes."""
 
     def sub_d2(j):
         return F.expr(
@@ -522,15 +531,19 @@ def pq_encode(batch: DataFrame, cent: DataFrame) -> DataFrame:
             "(acc, v) -> acc + v)"
         )
 
-    sd = (
-        batch.select("vec_id", V.quantize("embedding").alias("qv"))
-        .crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id",
-            "cent_id",
-            F.posexplode(F.array(*[sub_d2(j) for j in range(PQ_M)])).alias("j", "d2"),
-        )
+    return vecs_q.crossJoin(F.broadcast(cent)).select(
+        "vec_id",
+        "cent_id",
+        F.posexplode(F.array(*[sub_d2(j) for j in range(PQ_M)])).alias("j", "d2"),
     )
+
+
+def pq_encode(batch: DataFrame, cent: DataFrame) -> DataFrame:
+    """Encode a batch of vectors to PQ codes against the seed codebook:
+    per subspace, the nearest sub-centroid by integer-exact quantized
+    L2 (asc-cent_id tie-break) — similarity_pq_adc's encode stage, so
+    the streamed code table equals the batch-built one bit-for-bit."""
+    sd = pq_seed_d2(batch.select("vec_id", V.quantize("embedding").alias("qv")), cent)
     wcode = W.partitionBy("vec_id", "j").orderBy("d2", "cent_id")
     return (
         sd.withColumn("rn", F.row_number().over(wcode))
@@ -539,16 +552,11 @@ def pq_encode(batch: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def train_pq_codebook(vecs_q: DataFrame, n_iter: int = 2) -> DataFrame:
-    """Per-subspace Lloyd codebook training over an arbitrary quantized
-    vector frame (vec_id, qv) — the frame-generic twin of queries.llm's
-    _pq_trained_adc training loop (same arithmetic: exact int64
-    squared-L2 over PQ_DIM-element subvectors, means re-quantized via
-    one IEEE double division + round, empty cells carry their previous
-    position, vec_id < PQ_C seed slices), so a retrained code store is
-    bit-replayable by the _pq_cb_trained_duck oracle. Returns the
-    trained codebook (j, code, cv: array<bigint>[PQ_DIM])."""
-    sub = vecs_q.select(
+def pq_subvectors(vecs_q: DataFrame) -> DataFrame:
+    """Split quantized vectors (vec_id, qv) into their PQ_M subvectors
+    (vec_id, j, sv: array<bigint>[PQ_DIM]) — the relation the trained
+    codebook is fit on and encodes."""
+    return vecs_q.select(
         "vec_id",
         F.posexplode(
             F.transform(
@@ -557,59 +565,58 @@ def train_pq_codebook(vecs_q: DataFrame, n_iter: int = 2) -> DataFrame:
             )
         ).alias("j", "sv"),
     )
+
+
+def _nearest_code(sub: DataFrame, cb: DataFrame) -> DataFrame:
+    """Per (vec_id, j), the codebook cell nearest the subvector by exact
+    integer squared-L2, asc-code tie-break: (vec_id, j, code, sv)."""
+    aw = W.partitionBy("vec_id", "j").orderBy(F.asc("d2"), F.asc("code"))
+    return (
+        sub.join(F.broadcast(cb), "j")
+        .select("vec_id", "j", "code", "sv", V.l2sq_q("sv", "cv").alias("d2"))
+        .withColumn("rn", F.row_number().over(aw))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "j", "code", "sv")
+    )
+
+
+def train_pq_codebook(sub: DataFrame, n_iter: int = 2) -> DataFrame:
+    """Per-subspace Lloyd codebook training over a subvector relation
+    (vec_id, j, sv) from pq_subvectors() — the one PQ training loop,
+    behind similarity_pq_trained and PqCodesStore.retrain. Seeds are
+    the vec_id < PQ_C vectors' slices; distances are exact int64
+    squared-L2; means are re-quantized via one IEEE double division +
+    round; empty cells keep their previous position. The
+    _pq_cb_trained_duck oracle replays it bit-identically. Returns the
+    trained codebook (j, code, cv: array<bigint>[PQ_DIM]).
+
+    Each iteration is one broadcast-join pass over `sub` and ONE
+    shuffle of (j, code, p) partial sums."""
     cb = sub.filter(F.col("vec_id") < PQ_C).select(
         "j", F.col("vec_id").alias("code"), F.col("sv").alias("cv")
     )
-    d2 = V.l2sq_q("sv", "cv")
-    aw = W.partitionBy("vec_id", "j").orderBy(F.asc("d2"), F.asc("code"))
     for _ in range(n_iter):
-        assign = (
-            sub.join(F.broadcast(cb), "j")
-            .select("vec_id", "j", "code", "sv", d2.alias("d2"))
-            .withColumn("rn", F.row_number().over(aw))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "j", "code", "sv")
-        )
         upd = (
-            assign.select("j", "code", F.posexplode("sv").alias("p", "q"))
+            _nearest_code(sub, cb)
+            .select("j", "code", F.posexplode("sv").alias("p", "q"))
             .groupBy("j", "code", "p")
             .agg(F.round(F.sum("q") / F.count("*")).cast("bigint").alias("nv"))
+            .groupBy("j", "code")
+            .agg(V.pos_array("p", "nv").alias("nv_arr"))
         )
-        upd_arr = upd.groupBy("j", "code").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("p", "nv"))),
-                lambda st: st["nv"],
-            ).alias("nv_arr")
-        )
-        cb = cb.join(upd_arr, ["j", "code"], "left").select(
+        cb = cb.join(upd, ["j", "code"], "left").select(
             "j", "code", F.coalesce("nv_arr", F.col("cv")).alias("cv")
         )
     return cb
 
 
-def pq_encode_trained(vecs_q: DataFrame, cb: DataFrame) -> DataFrame:
-    """Encode quantized vectors (vec_id, qv) against a TRAINED
-    (j, code, cv) codebook: per subspace, exact integer squared-L2
-    argmin with the asc-code tie-break — the retrained twin of
-    pq_encode, and the arithmetic PqCodesStore.retrain migrates with."""
-    sub = vecs_q.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(PQ_M - 1)),
-                lambda j: F.slice("qv", j * PQ_DIM + 1, PQ_DIM),
-            )
-        ).alias("j", "sv"),
-    )
-    d2 = V.l2sq_q("sv", "cv")
-    wcode = W.partitionBy("vec_id", "j").orderBy(F.asc("d2"), F.asc("code"))
-    return (
-        sub.join(F.broadcast(cb), "j")
-        .select("vec_id", "j", "code", d2.alias("d2"))
-        .withColumn("rn", F.row_number().over(wcode))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "j", "code")
-    )
+def pq_encode_trained(sub: DataFrame, cb: DataFrame) -> DataFrame:
+    """Encode a subvector relation (vec_id, j, sv) against a TRAINED
+    (j, code, cv) codebook: (vec_id, j, code), each subvector's nearest
+    cell. The codebook counterpart of pq_encode, used by
+    similarity_pq_trained, PqCodesStore.retrain and the post-retrain
+    append stream."""
+    return _nearest_code(sub, cb).select("vec_id", "j", "code")
 
 
 class PqCodesStore(BatchAppendStore):
@@ -708,8 +715,9 @@ class PqCodesStore(BatchAppendStore):
 
         Same machinery as IvfAssignmentStore.retrain, via the shared
         BatchAppendStore swap tail: exact integer Lloyd training
-        (train_pq_codebook — bit-replayable by the _pq_cb_trained_duck
-        oracle), re-encode of the serving corpus with batch lineage
+        (train_pq_codebook, the loop similarity_pq_trained also runs —
+        bit-replayable by the _pq_cb_trained_duck oracle), re-encode
+        (pq_encode_trained) of the serving corpus with batch lineage
         preserved row-by-row, verify-then-swap under the WriterLease
         against a counted expectation (|serving vectors| x PQ_M code
         rows), tombstoned vectors' codes byte-dropped, trained codebook
@@ -740,16 +748,16 @@ class PqCodesStore(BatchAppendStore):
             try:
                 n_vec = vecs.count()
                 expected = n_vec * PQ_M
-                cb = train_pq_codebook(vecs.select("vec_id", "qv"), n_iter)
+                sub = pq_subvectors(vecs.select("vec_id", "qv"))
                 # one training pass, not two: the encode below and the
                 # codebook sidecar write both consume the lazy Lloyd
                 # chain — materialize the PQ_M x PQ_C-row dim once
                 # (same fix as IvfAssignmentStore.retrain)
-                cb = cb.localCheckpoint()
-                rows = pq_encode_trained(
-                    vecs.select("vec_id", "qv"), cb
-                ).join(vecs.select("vec_id", "batch_id"), "vec_id").select(
-                    "vec_id", "j", "code", "batch_id"
+                cb = train_pq_codebook(sub, n_iter).localCheckpoint()
+                rows = (
+                    pq_encode_trained(sub, cb)
+                    .join(vecs.select("vec_id", "batch_id"), "vec_id")
+                    .select("vec_id", "j", "code", "batch_id")
                 )
                 # evolved columns travel: row identity on this layout
                 # is (vec_id, j, batch_id) — see _carry_evolved
@@ -791,8 +799,10 @@ def foreach_batch_pq_encode(
                 rows = pq_encode(batch, cent)
             else:
                 rows = pq_encode_trained(
-                    batch.select(
-                        "vec_id", V.quantize("embedding").alias("qv")
+                    pq_subvectors(
+                        batch.select(
+                            "vec_id", V.quantize("embedding").alias("qv")
+                        )
                     ),
                     trained,
                 )

@@ -237,6 +237,7 @@ def _trained_want(spark, serving_filter=None):
     """(vec_id, cent_id) of a fresh 2-iteration trained assignment over
     the fixture corpus (optionally filtered) — the retrain contract."""
     from chchfr_data_collection_spark.streaming.embeddings import (
+        centroid_arrays,
         train_centroids,
     )
     from chchfr_data_collection_spark.functions import vectors as V
@@ -246,7 +247,7 @@ def _trained_want(spark, serving_filter=None):
     if serving_filter is not None:
         emb = emb.filter(serving_filter)
     vecs = emb.select("vec_id", V.quantize("embedding").alias("qv"))
-    cent = train_centroids(vecs, 2)
+    cent = centroid_arrays(train_centroids(vecs, 2))
     dist = F.aggregate(
         F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("bigint"),
@@ -491,6 +492,7 @@ def test_pq_retrain_migrates_and_trained_appends(spark, tmp_path):
     from chchfr_data_collection_spark.streaming.embeddings import (
         EMBEDDINGS_SCHEMA,
         pq_encode_trained,
+        pq_subvectors,
         train_pq_codebook,
     )
 
@@ -506,12 +508,12 @@ def test_pq_retrain_migrates_and_trained_appends(spark, tmp_path):
     receipt = store.retrain(old_corpus, 2)
     assert receipt["vectors"] == 399 and receipt["rows"] == 399 * 16
 
-    vecs_q = old_corpus.filter(F.col("vec_id") != 9).select(
-        "vec_id", V.quantize("embedding").alias("qv")
+    sub = pq_subvectors(
+        old_corpus.filter(F.col("vec_id") != 9).select(
+            "vec_id", V.quantize("embedding").alias("qv")
+        )
     )
-    want = _pq_rows(
-        pq_encode_trained(vecs_q, train_pq_codebook(vecs_q, 2))
-    )
+    want = _pq_rows(pq_encode_trained(sub, train_pq_codebook(sub, 2)))
     assert _pq_rows(store.read()) == want
     raw = spark.read.parquet(store.codes_path)
     assert raw.filter(F.col("vec_id") == 9).count() == 0, (
@@ -533,7 +535,7 @@ def test_pq_retrain_migrates_and_trained_appends(spark, tmp_path):
     fresh = PqCodesStore(spark, store.base_path)
     fresh.purge_forgotten()
     assert not pathlib.Path(fresh._retrain_commit_path).exists()
-    want1 = _pq_rows(pq_encode_trained(vecs_q, train_pq_codebook(vecs_q, 1)))
+    want1 = _pq_rows(pq_encode_trained(sub, train_pq_codebook(sub, 1)))
     assert _pq_rows(fresh.read()) == want1
 
     # post-retrain streamed append encodes with the trained codebook
@@ -548,13 +550,59 @@ def test_pq_retrain_migrates_and_trained_appends(spark, tmp_path):
         stream, cent, fresh.base_path, str(tmp_path / "ck")
     )
     q.awaitTermination()
-    new_q = _emb(spark).filter(F.col("vec_id") >= 400).select(
-        "vec_id", V.quantize("embedding").alias("qv")
+    new_sub = pq_subvectors(
+        _emb(spark)
+        .filter(F.col("vec_id") >= 400)
+        .select("vec_id", V.quantize("embedding").alias("qv"))
     )
     got_new = _pq_rows(fresh.read().filter(F.col("vec_id") >= 400))
-    assert got_new == _pq_rows(pq_encode_trained(new_q, fresh.codebook())), (
+    assert got_new == _pq_rows(pq_encode_trained(new_sub, fresh.codebook())), (
         "post-retrain append used the stale seed codebook"
     )
+
+
+def test_shared_trainers_equal_duck_oracle(spark):
+    """The one IVF and the one PQ Lloyd trainer, which the catalog
+    entries and the store retrains share, replay their DuckDB CTE
+    oracles value for value: the k-means centroid table (n_assigned
+    included) and the trained per-(j, code) codebook cells."""
+    import duckdb
+
+    from chchfr_data_collection_spark.functions import vectors as V
+    from chchfr_data_collection_spark.queries.llm import (
+        _kmeans_iter_duck,
+        _pq_cb_trained_duck,
+        embedding_kmeans_iter,
+    )
+    from chchfr_data_collection_spark.streaming.embeddings import (
+        pq_subvectors,
+        train_pq_codebook,
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{SF_DIR}/embeddings.parquet'"
+    )
+
+    got = sorted(tuple(r) for r in embedding_kmeans_iter(spark, SF_DIR).collect())
+    want = sorted(con.execute(_kmeans_iter_duck(2)).fetchall())
+    assert len(got) == 8 * 64 and got == want
+
+    sub = pq_subvectors(
+        _emb(spark).select("vec_id", V.quantize("embedding").alias("qv"))
+    )
+    got = sorted(
+        (r.j, r.code, tuple(r.cv))
+        for r in train_pq_codebook(sub, 2).collect()
+    )
+    want = sorted(
+        (j, code, tuple(cv))
+        for j, code, cv in con.execute(
+            f"WITH {_pq_cb_trained_duck(2)} "
+            "SELECT j, code, list(c_val ORDER BY p) FROM cb2 GROUP BY j, code"
+        ).fetchall()
+    )
+    assert len(got) == 16 * 16 and got == want
 
 
 # -- log compaction (round-12 verdict, next #1) ------------------------------
