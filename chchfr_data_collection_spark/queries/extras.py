@@ -796,7 +796,7 @@ def _cc_store_bootstrapped(spark, sf_dir):
 @register(
     "dedup_cc_incremental_persisted",
     sql=_cc_oracle_sql(),
-    tags=("llm", "dedup", "iterative", "incremental", "store"),
+    tags=("llm", "dedup", "iterative", "incremental", "store", "fixture-write"),
 )
 def dedup_cc_incremental_persisted(spark, sf_dir):
     """dedup_cc_incremental, PRODUCTIZED: the landed (node, component)
@@ -1005,7 +1005,10 @@ def dedup_cc_tiered_compaction_probe(spark, sf_dir):
 @register(
     "dedup_cc_store_time_travel",
     sql=_cc_landed_oracle_sql(),
-    tags=("llm", "dedup", "iterative", "incremental", "store", "timetravel"),
+    tags=(
+        "llm", "dedup", "iterative", "incremental", "store", "timetravel",
+        "fixture-write",
+    ),
 )
 def dedup_cc_store_time_travel(spark, sf_dir):
     """TIME-TRAVEL read of the persisted component store: after the
@@ -1036,7 +1039,7 @@ def dedup_cc_store_time_travel(spark, sf_dir):
 @register(
     "dedup_cc_store_snapshot",
     sql=_cc_oracle_sql(),
-    tags=("llm", "dedup", "iterative", "store", "snapshot"),
+    tags=("llm", "dedup", "iterative", "store", "snapshot", "fixture-write"),
 )
 def dedup_cc_store_snapshot(spark, sf_dir):
     """BACKUP/RESTORE on the persisted cluster store: after the delta

@@ -24,9 +24,7 @@ from ..streaming.embeddings import (
     PQ_DIM,
     PQ_M,
     centroid_arrays,
-    pq_encode,
     pq_encode_trained,
-    pq_seed_d2,
     pq_subvectors,
     train_centroids,
     train_pq_codebook,
@@ -4668,24 +4666,22 @@ WHERE rn <= {_PQ_K}
 """
 
 
-def _pq_seed_qd(emb):
-    """The query distance table (qid, code, j, d2) of the first _PQ_NQ
-    vectors against the seed codebook (the first PQ_C vectors), plus
-    that codebook (cent_id, cv)."""
-    qv = V.quantize("embedding")
-    cent = emb.filter(F.col("vec_id") < PQ_C).select(
-        F.col("vec_id").alias("cent_id"), qv.alias("cv")
+def _adc_scores(codes, sub, cb):
+    """Asymmetric distances (qid, cid, adc_dist): the query distance
+    table — the first _PQ_NQ vectors' subvectors (sub: vec_id, j, sv)
+    against every cell of the codebook cb (j, code, cv) — summed over
+    each candidate's codes (vec_id, j, code), the query itself
+    excluded."""
+    qd = (
+        sub.filter(F.col("vec_id") < _PQ_NQ)
+        .join(F.broadcast(cb), "j")
+        .select(
+            F.col("vec_id").alias("qid"),
+            "code",
+            "j",
+            V.l2sq_q("sv", "cv").alias("d2"),
+        )
     )
-    qd = pq_seed_d2(
-        emb.filter(F.col("vec_id") < _PQ_NQ).select("vec_id", qv.alias("qv")), cent
-    ).select(F.col("vec_id").alias("qid"), F.col("cent_id").alias("code"), "j", "d2")
-    return qd, cent
-
-
-def _adc_scores(codes, qd):
-    """Asymmetric distances (qid, cid, adc_dist): each candidate's
-    query distances (qd: qid, code, j, d2) summed over its codes
-    (vec_id, j, code), the query itself excluded."""
     return (
         codes.join(F.broadcast(qd), ["code", "j"])
         .filter(F.col("vec_id") != F.col("qid"))
@@ -4694,12 +4690,19 @@ def _adc_scores(codes, qd):
     )
 
 
-def _pq_adc(spark, sf_dir):
-    """ADC candidate scores (qid, cid, adc_dist) — shared by the pure
-    PQ top-k and the re-ranked serving path."""
+def _pq_subvectors(spark, sf_dir):
+    """The embeddings fixture's subvector relation (vec_id, j, sv)."""
     emb = T(spark, sf_dir, "embeddings", parallel=True)
-    qd, cent = _pq_seed_qd(emb)
-    return _adc_scores(pq_encode(emb, cent), qd)
+    return pq_subvectors(emb.select("vec_id", V.quantize("embedding").alias("qv")))
+
+
+def _pq_adc(spark, sf_dir):
+    """ADC candidate scores (qid, cid, adc_dist) over the seed codebook
+    (train_pq_codebook with zero iterations) — shared by the pure PQ
+    top-k and the re-ranked serving path."""
+    sub = _pq_subvectors(spark, sf_dir)
+    cb = train_pq_codebook(sub, 0)
+    return _adc_scores(pq_encode_trained(sub, cb), sub, cb)
 
 
 @register(
@@ -4934,28 +4937,15 @@ def _pq_trained_duck() -> str:
 def _pq_trained_adc(spark, sf_dir):
     """ADC candidate scores (qid, cid, adc_dist) over a TRAINED
     codebook: train_pq_codebook's per-subspace Lloyd iterations, the
-    corpus encoded against the result (pq_encode_trained), then
-    _adc_scores as in _pq_adc. Training is integer-exact (quantized
-    distances, re-quantized means), so the oracle replays the codebook
-    AND the serving bit-for-bit."""
-    emb = T(spark, sf_dir, "embeddings", parallel=True).select(
-        "vec_id", V.quantize("embedding").alias("qv")
-    )
+    corpus encoded against the result, then _adc_scores as in _pq_adc.
+    Training is integer-exact (quantized distances, re-quantized
+    means), so the oracle replays the codebook AND the serving
+    bit-for-bit."""
     # the subvector relation feeds every training iteration, the encode
     # pass, and the query distance table — persist ONE copy
-    sub = replace(spark, "pq_trained_sub", pq_subvectors(emb))
+    sub = replace(spark, "pq_trained_sub", _pq_subvectors(spark, sf_dir))
     cb = train_pq_codebook(sub, _PQT_ITER)
-    qd = (
-        sub.filter(F.col("vec_id") < _PQ_NQ)
-        .join(F.broadcast(cb), "j")
-        .select(
-            F.col("vec_id").alias("qid"),
-            "code",
-            "j",
-            V.l2sq_q("sv", "cv").alias("d2"),
-        )
-    )
-    return _adc_scores(pq_encode_trained(sub, cb), qd)
+    return _adc_scores(pq_encode_trained(sub, cb), sub, cb)
 
 
 @register(
@@ -5217,8 +5207,8 @@ def similarity_pq_forget_probe(spark, sf_dir):
         forget_id="takedown-9",
     )
     codes = store.read().select("vec_id", "j", "code")
-    qd, _ = _pq_seed_qd(emb)
-    adc = _adc_scores(codes, qd)
+    sub = _pq_subvectors(spark, sf_dir)
+    adc = _adc_scores(codes, sub, train_pq_codebook(sub, 0))
     wk = W.partitionBy("qid").orderBy("adc_dist", "cid")
     return (
         adc.withColumn("rank", F.row_number().over(wk))

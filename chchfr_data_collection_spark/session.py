@@ -43,12 +43,6 @@ def get_spark(
     - Session timezone pinned to UTC so timestamp semantics match the
       naive-UTC parquet fixtures (and the DuckDB oracle).
     - Arrow enabled for the pandas-UDF slow path.
-    - Generated-code cache raised from Spark's 100 compiled classes:
-      a session that cycles through more distinct plan shapes than
-      that (the store protocols, a catalog walk) evicts and recompiles
-      the same generated source again and again. Measured on a 4-core
-      box over tests/test_component_store.py: 3240 compiles (29 s of
-      compile time) at 100 entries, 561 (5.5 s) at a larger bound.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
@@ -67,7 +61,6 @@ def get_spark(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -502,60 +502,10 @@ PQ_DIM = 4
 PQ_C = 16
 
 
-def pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The deterministic PQ codebook (same convention as
-    queries.llm.similarity_pq_adc: the first PQ_C vectors' quantized
-    subvectors), one row per (cent_id), carrying the full quantized
-    vector — subspace slicing happens in the encoder so the dim stays
-    one broadcastable row per centroid."""
-    from ..session import load_table
-
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < PQ_C)
-        .select(F.col("vec_id").alias("cent_id"), V.quantize("embedding").alias("cv"))
-    )
-
-
-def pq_seed_d2(vecs_q: DataFrame, cent: DataFrame) -> DataFrame:
-    """Per subspace j, the exact integer squared-L2 from each quantized
-    vector (vec_id, qv) to the same slice of every seed-codebook row
-    (cent_id, cv): (vec_id, cent_id, j, d2). Encoding takes its argmin;
-    ADC queries sum it over a candidate's codes."""
-
-    def sub_d2(j):
-        return F.expr(
-            f"aggregate(zip_with(slice(qv, {j * PQ_DIM + 1}, {PQ_DIM}), "
-            f"slice(cv, {j * PQ_DIM + 1}, {PQ_DIM}), "
-            "(x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), "
-            "(acc, v) -> acc + v)"
-        )
-
-    return vecs_q.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "cent_id",
-        F.posexplode(F.array(*[sub_d2(j) for j in range(PQ_M)])).alias("j", "d2"),
-    )
-
-
-def pq_encode(batch: DataFrame, cent: DataFrame) -> DataFrame:
-    """Encode a batch of vectors to PQ codes against the seed codebook:
-    per subspace, the nearest sub-centroid by integer-exact quantized
-    L2 (asc-cent_id tie-break) — similarity_pq_adc's encode stage, so
-    the streamed code table equals the batch-built one bit-for-bit."""
-    sd = pq_seed_d2(batch.select("vec_id", V.quantize("embedding").alias("qv")), cent)
-    wcode = W.partitionBy("vec_id", "j").orderBy("d2", "cent_id")
-    return (
-        sd.withColumn("rn", F.row_number().over(wcode))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "j", F.col("cent_id").alias("code"))
-    )
-
-
 def pq_subvectors(vecs_q: DataFrame) -> DataFrame:
     """Split quantized vectors (vec_id, qv) into their PQ_M subvectors
-    (vec_id, j, sv: array<bigint>[PQ_DIM]) — the relation the trained
-    codebook is fit on and encodes."""
+    (vec_id, j, sv: array<bigint>[PQ_DIM]) — the relation every PQ
+    codebook is cut from, trained on and encodes."""
     return vecs_q.select(
         "vec_id",
         F.posexplode(
@@ -564,6 +514,28 @@ def pq_subvectors(vecs_q: DataFrame) -> DataFrame:
                 lambda j: F.slice("qv", j * PQ_DIM + 1, PQ_DIM),
             )
         ).alias("j", "sv"),
+    )
+
+
+def pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The deterministic seed PQ codebook (j, code, cv) — the first PQ_C
+    vectors' quantized subvectors, i.e. train_pq_codebook with zero
+    iterations (same convention as queries.llm.similarity_pq_adc)."""
+    from ..session import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < PQ_C)
+    return train_pq_codebook(
+        pq_subvectors(emb.select("vec_id", V.quantize("embedding").alias("qv"))), 0
+    )
+
+
+def pq_encode(batch: DataFrame, cb: DataFrame) -> DataFrame:
+    """Encode a batch of raw vectors (vec_id, embedding) to PQ codes
+    (vec_id, j, code) against a (j, code, cv) codebook, seed or trained:
+    pq_encode_trained over the batch's subvectors, so the streamed code
+    table equals the batch-built one bit-for-bit."""
+    return pq_encode_trained(
+        pq_subvectors(batch.select("vec_id", V.quantize("embedding").alias("qv"))), cb
     )
 
 
@@ -611,11 +583,10 @@ def train_pq_codebook(sub: DataFrame, n_iter: int = 2) -> DataFrame:
 
 
 def pq_encode_trained(sub: DataFrame, cb: DataFrame) -> DataFrame:
-    """Encode a subvector relation (vec_id, j, sv) against a TRAINED
-    (j, code, cv) codebook: (vec_id, j, code), each subvector's nearest
-    cell. The codebook counterpart of pq_encode, used by
-    similarity_pq_trained, PqCodesStore.retrain and the post-retrain
-    append stream."""
+    """Encode a subvector relation (vec_id, j, sv) against a (j, code,
+    cv) codebook, seed (pq_codebook) or trained: (vec_id, j, code), each
+    subvector's nearest cell — the one PQ encoder, behind pq_encode,
+    the ADC entries, PqCodesStore.retrain and the append stream."""
     return _nearest_code(sub, cb).select("vec_id", "j", "code")
 
 
@@ -776,13 +747,14 @@ class PqCodesStore(BatchAppendStore):
 
 def foreach_batch_pq_encode(
     stream_df: DataFrame,
-    cent: DataFrame,
+    cb: DataFrame,
     store_base: str,
     checkpoint: str,
     lease: bool = False,
 ):
     """Run the PQ insert path over a stream: per micro-batch, encode
-    arriving vectors to codes and land them in the PqCodesStore at
+    arriving vectors to codes against `cb` (the store's trained codebook
+    instead once retrain() has run) and land them in the PqCodesStore at
     `store_base` — the 16x-smaller table similarity_pq_adc serves from.
     Same redelivery-idempotence and lease contract as
     foreach_batch_ivf_assign (deterministic per-row encode, batch_id-
@@ -795,17 +767,7 @@ def foreach_batch_pq_encode(
             # a retrained store's appends encode against the TRAINED
             # codebook — the geometry-aware discipline of the IVF sink
             trained = store.codebook()
-            if trained is None:
-                rows = pq_encode(batch, cent)
-            else:
-                rows = pq_encode_trained(
-                    pq_subvectors(
-                        batch.select(
-                            "vec_id", V.quantize("embedding").alias("qv")
-                        )
-                    ),
-                    trained,
-                )
+            rows = pq_encode(batch, cb if trained is None else trained)
             store.append_batch(rows, batch_id)
 
         if lease:

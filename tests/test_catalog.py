@@ -259,8 +259,9 @@ def test_column_parity_with_oracle(spark, sf_small, cat):
         return name, sorted(q.fn(spark, sf_small).columns)
 
     # entries tagged "fixture-write" mutate a shared fixture store (a
-    # takedown on the memoized IVF/PQ store), so they run on this
-    # thread after the pool drains, never beside that store's readers
+    # takedown on the memoized IVF/PQ store, a delta on the memoized
+    # component store), so they run on this thread after the pool
+    # drains, never beside that store's other users
     mutating = [e for e in entries if "fixture-write" in e[1].tags]
     with ThreadPoolExecutor(max_workers=8) as pool:
         spark_cols = dict(
