@@ -1015,80 +1015,22 @@ class ComponentStore(StoreKernel):
         clone._write_json(f"{dest}/_snapshot.json", manifest)
         return {**manifest, "dest": dest}
 
-    def sync_to(self, dest_path: str) -> dict:
-        """INCREMENTAL backup of the patch store (the
-        BatchAppendStore.sync_to contract on this layout): ship only
-        the marked patch partitions the clone lacks (masked through
-        the CURRENT tombstones — no forgotten bytes travel), mark them
-        on the clone after the write commits (a crashed sync leaves
-        them invisible; the re-run replaces them via dynamic
-        overwrite), mirror the standing tombstones per forget_id, and
-        rewrite the attestation manifest LAST. Rows forgotten after
-        the original snapshot already sit in the clone's older patches
-        as bytes: the mirrored tombstones mask them immediately;
-        `compact(purge_forgotten=True)` on the clone erases them.
-
-        Refuses a destination that is not a clone of this store: no
-        snapshot attestation, or marked (seq, delta_id) entries the
-        source does not hold — which is also what a source-side
-        compact() since the snapshot looks like (the fold retired
-        those seqs): history was collapsed, take a fresh snapshot."""
-        from .lease import WriterLease
-
+    def _sync_prepare(self) -> None:
         self._require_bootstrapped()
-        with WriterLease(self.spark, self.base_path):
-            return self._sync_locked(dest_path)
-
-    def _sync_locked(self, dest_path: str) -> dict:
-        """sync_to's body; the CALLER holds this store's
-        WriterLease (sync_everywhere's quiesce mode holds the
-        fleet's leases and calls this directly)."""
-        self._require_bootstrapped()
-        dest = dest_path.rstrip("/")
-        clone = ComponentStore(self.spark, dest)
-        if clone.snapshot_manifest() is None:
-            raise RuntimeError(
-                f"sync_to(): {dest} has no snapshot attestation — sync "
-                "only updates a completed snapshot_to() clone; take a "
-                "full snapshot first"
-            )
-        self._deleted_cache = _UNSET
-        # identity gate: the manifest records which store the clone
-        # was exported from — (seq, delta_id) overlap alone is not
-        # an identity (round-12 ADVICE, medium, on the batch
-        # stores; same discipline here)
-        prior = clone.snapshot_manifest()
-        recorded = prior.get("source")
-        if recorded != self.base_path:
-            raise RuntimeError(
-                f"sync_to(): the clone at {dest} was exported from "
-                f"{recorded!r}, not from {self.base_path} — syncing "
-                "into another store's clone would merge unrelated "
-                "corpora. Snapshot THIS store to a fresh path."
-            )
-        self._tombstone_narrowing_gate(prior, dest)
         self._recover_fold()  # finish/undo a crashed compact() first
         self._apply_expiry()  # sweep a crashed expire() first
-        self._vacuum_sweep()
-        # retention-floor gate (the batch-store discipline): a clone
-        # whose floor is ahead would have patches below it re-shipped
-        # and re-served — resurrecting retired rows on the replica
-        src_exp = self._read_json(self.expired_ledger_path)
-        clone_exp = clone._read_json(clone.expired_ledger_path)
-        src_floor = int(src_exp["before"]) if src_exp is not None else None
-        clone_floor = (
-            int(clone_exp["before"]) if clone_exp is not None else None
-        )
-        if clone_floor is not None and (
-            src_floor is None or clone_floor > src_floor
-        ):
-            raise RuntimeError(
-                f"sync_to(): the clone at {dest} has a retention floor "
-                f"({clone_floor}) ahead of the source's ({src_floor}) "
-                "— patches the source still holds would resurrect on "
-                "the replica. Expire the source to the clone's "
-                "boundary first, or take a fresh snapshot."
-            )
+
+    def _sync_ship(self, clone, prior: dict) -> tuple[dict, dict]:
+        """Units are committed positions: marked patches (seq,
+        delta_id) and generations (gseq, gid), one coordinate space on
+        each side. Missing patches land by dynamic overwrite and are
+        marked after the write commits; missing generations land as
+        generations and the clone's gens-ledger rewrite commits them.
+        A position is immutable once committed (every apply takes a
+        fresh seq), so a shared position needs no re-delivery check;
+        a source compact() since the snapshot retires clone-held
+        positions and refuses as foreign (history was collapsed)."""
+        dest = clone.base_path
         marked = self._marked()
         src_gens = self._generations()
         clone_gens = clone._generations()
@@ -1116,11 +1058,9 @@ class ComponentStore(StoreKernel):
                     "itself along different boundaries. Take a fresh "
                     "snapshot."
                 )
-        # positions: patches by marker, generations by ledger — one
-        # coordinate space on each side
-        src_pos = {s: d for s, d in marked.items()}
+        src_pos = dict(marked)
         src_pos.update({int(g["gseq"]): g["gid"] for g in src_gens})
-        have = dict(clone._marked())
+        have = clone._marked()
         have.update({int(g["gseq"]): g["gid"] for g in clone_gens})
         foreign = sorted(
             (s, d) for s, d in have.items() if src_pos.get(s) != d
@@ -1167,18 +1107,7 @@ class ComponentStore(StoreKernel):
             clone._write_json(
                 clone.gens_ledger_path, {"generations": src_gens}
             )
-        # the retention floor travels (the foreign gate above already
-        # proved the clone holds nothing below it)
-        if src_exp is not None:
-            clone._write_json(clone.expired_ledger_path, src_exp)
-        fids = self._tombstone_fingerprints()
-        for fid in sorted(fids):
-            ids = self.spark.read.parquet(
-                f"{self.deleted_path}/forget_id={fid}"
-            ).select(self.TOMBSTONE_KEY)
-            clone.forget(ids, fid)
-        manifest = {
-            "source": self.base_path,
+        return {"patches": [[s, src_pos[s]] for s in missing]}, {
             "history": [[s, d] for s, d in self.history()],
             # same meaning as snapshot_to's "rows": raw staged
             # committed rows on the clone — NOT the resolved
@@ -1186,16 +1115,6 @@ class ComponentStore(StoreKernel):
             # attestation field two meanings depending on which
             # writer last touched it (round-12 ADVICE, low)
             "rows": clone._assign_marked().count(),
-            "tombstones_applied": [],
-            "tombstones_mirrored": sorted(fids),
-            "tombstone_fingerprints": fids,
-            "high_water": self.high_water(),
-        }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {
-            **manifest,
-            "dest": dest,
-            "patches_shipped": [[s, src_pos[s]] for s in missing],
         }
 
     def _tier_pull(self, reals: list, gens: list, merge_ratio) -> list:

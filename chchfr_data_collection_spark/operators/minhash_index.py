@@ -1244,47 +1244,8 @@ class MinHashIndex(StoreKernel):
                 )
         return sorted(out)
 
-    def sync_to(self, dest_path: str) -> dict:
-        """INCREMENTAL backup of the index (the BatchAppendStore
-        .sync_to contract on the MinHash layout): ship only the landed
-        delta partitions the clone lacks — arrays/postings keyed by the
-        index markers, pairs by the pairs markers, each masked through
-        the CURRENT tombstones (no forgotten bytes travel) and marked
-        on the clone only after its write commits (a crashed sync
-        leaves invisible partials; the re-run replaces them via the
-        pre-delete + dynamic overwrite every delta landing uses).
-        Write-log entries ship with their pairs deltas, the high-water
-        mark and `_folded` tombstones refresh, standing takedowns are
-        MIRRORED per forget_id (masked on the clone now, byte-erased at
-        the clone's own compact(purge_forgotten=True)), and the
-        attestation manifest is rewritten LAST.
-
-        Refuses while a fold manifest is pending, and refuses a
-        destination that is not a clone: no attestation, or landed
-        deltas the source does not hold — which is also what a
-        source-side compact() since the snapshot looks like (the fold
-        retired those deltas' markers): history was collapsed into a
-        generation the clone's deltas duplicate row-by-row, so merging
-        would double-count. Take a fresh snapshot after a fold."""
-        from .lease import WriterLease
-
+    def _sync_prepare(self) -> None:
         self._require_format()
-        with WriterLease(self.spark, self.base_path):
-            return self._sync_locked(dest_path)
-
-    def _sync_locked(self, dest_path: str) -> dict:
-        """sync_to's body; the CALLER holds this index's
-        WriterLease (sync_everywhere's quiesce mode holds the
-        fleet's leases and calls this directly)."""
-        self._require_format()
-        dest = dest_path.rstrip("/")
-        clone = MinHashIndex(self.spark, dest)
-        if clone.snapshot_manifest() is None:
-            raise RuntimeError(
-                f"sync_to(): {dest} has no snapshot attestation — sync "
-                "only updates a completed snapshot_to() clone; take a "
-                "full snapshot first"
-            )
         if (
             self._read_json(self.fold_commit_path) is not None
             or self._read_json(self.fold_intent_path) is not None
@@ -1294,190 +1255,153 @@ class MinHashIndex(StoreKernel):
                 f"{self.base_path} (compact() crashed or is "
                 "running) — run compact() to recover, then retry."
             )
-        self._deleted_cache = _UNSET
         self._recover_expiry()  # sweep a crashed expire() first
-        self._vacuum_sweep()
+
+    def _retention_ahead(self, clone) -> str | None:
+        """Retention here is the set of expired delta ids: a clone
+        that expired deltas the source still holds is ahead."""
+        ahead = sorted(
+            clone._landed_ids(clone.expired_path)
+            - self._landed_ids(self.expired_path)
+        )
+        if not ahead:
+            return None
+        return f"expired deltas {ahead} the source {self.base_path} still holds"
+
+    def _carry_retention(self, clone) -> None:
+        for did in sorted(self._landed_ids(self.expired_path)):
+            clone._mark_landed(clone.expired_path, did)
+
+    def _sync_ship(self, clone, prior: dict) -> tuple[dict, dict]:
+        """Units are landed deltas of two kinds: index deltas (arrays/
+        and postings/ move as one, keyed by the index markers) and
+        pairs snapshots (keyed by the pairs markers, shipped with
+        their write-log entries). Each ships through a pre-delete of
+        the clone's copy plus dynamic overwrite — a crashed sync's
+        partials, or a re-delivered delta's stale rows, are replaced —
+        and is marked on the clone only after its writes commit.
+        Re-delivery detection: a shared index delta whose content
+        fingerprint moved since the recorded export, or a shared pairs
+        delta whose log seq moved (a pairs retry re-lands under a
+        fresh seq), is re-shipped. The write-log high-water mark and
+        the `_folded` markers refresh after the ship. A source
+        compact() since the snapshot retires clone-held deltas and
+        refuses as foreign: the generation duplicates them row by
+        row, so merging would double-count."""
+        dest = clone.base_path
+        src_idx = self._landed_ids(self.landed_path)
+        src_pairs = self._landed_ids(self.landed_pairs_path)
+        clone_idx = clone._landed_ids(clone.landed_path)
+        clone_pairs = clone._landed_ids(clone.landed_pairs_path)
+        for have, src, what in (
+            (clone_idx, src_idx, "index"),
+            (clone_pairs, src_pairs, "pairs"),
+        ):
+            foreign = sorted(have - src)
+            if foreign:
+                raise RuntimeError(
+                    f"sync_to(): {dest} holds landed {what} deltas "
+                    f"{foreign} the source {self.base_path} does not "
+                    "— the clone diverged, a source compact() folded "
+                    "that history (fresh snapshot), or a source "
+                    "expire() retired it (expire the same delta_ids "
+                    "on the clone, then retry)."
+                )
+        # ---- index relations (arrays + postings move as one) ------
+        # fingerprinting cost, stated: O(landed deltas) metadata
+        # listings per sync — the same asymptotic class every probe's
+        # partition glob already pays, and compact() keeps the
+        # landed-delta count small by the store's own lifecycle
+        # contract
+        cur_fps = {did: self._index_delta_fp(did) for did in sorted(src_idx)}
+        # a manifest from before the fingerprints existed can't make
+        # the comparison: treat shared deltas as unchanged for THIS
+        # sync (the pre-fingerprint code's own blind spot, one last
+        # time) rather than mass re-shipping the corpus; the manifest
+        # written after this ship records fps, so detection engages
+        # from the next sync on
+        prior_fps = prior.get("index_delta_fps")
+        idx_changed = [] if prior_fps is None else sorted(
+            did
+            for did in (src_idx & clone_idx)
+            if prior_fps.get(did) != cur_fps[did]
+        )
+        idx_to_ship = sorted((src_idx - clone_idx) | set(idx_changed))
+        # ---- pairs (+ write log) ----------------------------------
+        log = self._log_entries()
+        src_seq = {d: s for s, d in log.items()}
+        clone_seq = {d: s for s, d in clone._log_entries().items()}
+        pairs_changed = sorted(
+            did
+            for did in (src_pairs & clone_pairs)
+            if clone_seq.get(did) != src_seq.get(did)
+        )
+        pairs_to_ship = sorted((src_pairs - clone_pairs) | set(pairs_changed))
         deleted, small = self._deleted_docs()
         if deleted is not None:
             deleted = deleted.persist()
-        shipped: dict = {}
+        dfs, HPath = self._fs_for(dest)
+
+        def _ship(rel, dids):
+            """Pre-delete the clone's copies of these deltas, then land
+            the masked rows."""
+            for did in dids:
+                for d in clone._delta_dirs(rel, did):
+                    dfs.delete(HPath(d), True)
+            present = sorted(set(dids) & self._partition_ids(rel))
+            if not present:
+                return
+            schema = (
+                self._pairs_read_schema()
+                if rel == "pairs"
+                else self._rel_schema(rel)
+            )
+            df = self._mask_deleted(
+                self.spark.read.schema(schema)
+                .parquet(self._rel_path(rel))
+                .where(F.col("delta_id").isin(present)),
+                rel,
+                deleted,
+                small,
+            )
+            parts = ("band", "delta_id") if rel == "postings" else ("delta_id",)
+            (
+                df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(*parts)
+                .parquet(clone._rel_path(rel))
+            )
+
         try:
-            fs, HPath = self._fs()
-            dfs, _ = self._fs_for(dest)
-            src_idx = self._landed_ids(self.landed_path)
-            src_pairs = self._landed_ids(self.landed_pairs_path)
-            prior = clone.snapshot_manifest()
-            # identity gate: delta-id overlap alone is not an
-            # identity (round-12 ADVICE, medium, on the batch
-            # stores; delta_ids here are usually unique strings but
-            # "bootstrap" is a universal default — same discipline)
-            recorded = prior.get("source")
-            if recorded != self.base_path:
-                raise RuntimeError(
-                    f"sync_to(): the clone at {dest} was exported "
-                    f"from {recorded!r}, not from {self.base_path} "
-                    "— syncing into another store's clone would "
-                    "merge unrelated corpora. Snapshot THIS index "
-                    "to a fresh path."
-                )
-            self._tombstone_narrowing_gate(prior, dest)
-            prior_fps = prior.get("index_delta_fps", {})
-            # retention gate (the batch-store floor gate on the
-            # delta-keyed layout): a clone that expired deltas the
-            # source still holds would have them RE-SHIPPED below —
-            # landing retired data back under retired ids while the
-            # clone's own expired markers exclude it from reads (an
-            # attested-but-invisible mess). The reverse direction
-            # (source expired, clone still holds) surfaces as foreign
-            # clone deltas below, with the expire-the-clone remedy.
-            src_expired = self._landed_ids(self.expired_path)
-            ahead = sorted(
-                clone._landed_ids(clone.expired_path) - src_expired
-            )
-            if ahead:
-                raise RuntimeError(
-                    f"sync_to(): the clone at {dest} expired deltas "
-                    f"{ahead} the source {self.base_path} still holds "
-                    "— its retention is ahead; shipped deltas would "
-                    "resurrect retired data. Expire the same "
-                    "delta_ids on the source first, or take a fresh "
-                    "snapshot."
-                )
-
-            def _refuse_foreign(have: set, src: set, what: str):
-                foreign = sorted(have - src)
-                if foreign:
-                    raise RuntimeError(
-                        f"sync_to(): {dest} holds landed {what} "
-                        f"deltas {foreign} the source "
-                        f"{self.base_path} does not — the clone "
-                        "diverged, a source compact() folded that "
-                        "history (fresh snapshot), or a source "
-                        "expire() retired it (expire the same "
-                        "delta_ids on the clone, then retry)."
-                    )
-
-            def _ship(rel, dids):
-                """Pre-delete the clone's copies of these deltas (a
-                prior crashed sync's partials, or a re-delivered
-                delta's stale rows), then land the masked rows."""
-                for did in dids:
-                    for d in clone._delta_dirs(rel, did):
-                        dfs.delete(HPath(d), True)
-                present = sorted(
-                    set(dids) & self._partition_ids(rel)
-                )
-                if not present:
-                    return
-                schema = (
-                    self._pairs_read_schema()
-                    if rel == "pairs"
-                    else self._rel_schema(rel)
-                )
-                df = self._mask_deleted(
-                    self.spark.read.schema(schema)
-                    .parquet(self._rel_path(rel))
-                    .where(F.col("delta_id").isin(present)),
-                    rel,
-                    deleted,
-                    small,
-                )
-                parts = (
-                    ("band", "delta_id")
-                    if rel == "postings"
-                    else ("delta_id",)
-                )
-                (
-                    df.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(*parts)
-                    .parquet(clone._rel_path(rel))
-                )
-
-            # ---- index relations (arrays + postings move as one) --
-            clone_idx = clone._landed_ids(clone.landed_path)
-            _refuse_foreign(clone_idx, src_idx, "index")
-            # fingerprinting cost, stated: O(landed deltas) metadata
-            # listings per sync — the same asymptotic class every
-            # probe's partition glob already pays, and compact()
-            # keeps the landed-delta count small by the store's own
-            # lifecycle contract
-            cur_fps = {
-                did: self._index_delta_fp(did) for did in sorted(src_idx)
-            }
-            # a RE-DELIVERED delta (same id, content rewritten by an
-            # insert retry since the last export) is invisible to
-            # the marker diff — the manifest's recorded source
-            # fingerprints are what detect it. A manifest from
-            # before the fingerprints existed can't make the
-            # comparison: treat shared deltas as unchanged for THIS
-            # sync (the pre-fingerprint code's own blind spot, one
-            # last time) rather than mass re-shipping the corpus;
-            # the manifest written below records fps, so detection
-            # engages from the next sync on.
-            legacy = "index_delta_fps" not in prior
-            idx_changed = [] if legacy else sorted(
-                did
-                for did in (src_idx & clone_idx)
-                if prior_fps.get(did) != cur_fps[did]
-            )
-            idx_to_ship = sorted((src_idx - clone_idx) | set(idx_changed))
-            shipped["index"] = idx_to_ship
-            shipped["index_redelivered"] = idx_changed
             # retract markers of re-shipped deltas while their rows
-            # are mid-rewrite, land BOTH relations, then re-mark —
-            # the insert flow's mark-after-both-writes discipline
+            # are mid-rewrite, land BOTH relations, then re-mark — the
+            # insert flow's mark-after-both-writes discipline
             for did in idx_to_ship:
                 clone._unmark_landed(clone.landed_path, did)
-            for rel in ("arrays", "postings"):
-                if idx_to_ship:
+            if idx_to_ship:
+                for rel in ("arrays", "postings"):
                     _ship(rel, idx_to_ship)
             for did in idx_to_ship:
                 clone._mark_landed(clone.landed_path, did)
-
-            # ---- pairs (+ write log) ------------------------------
-            clone_pairs = clone._landed_ids(clone.landed_pairs_path)
-            _refuse_foreign(clone_pairs, src_pairs, "pairs")
-            log = self._log_entries()
-            src_seq = {d: s for s, d in log.items()}
-            clone_seq = {d: s for s, d in clone._log_entries().items()}
-            # a pairs retry re-lands under a FRESH seq: a shared
-            # delta whose log seq moved was re-delivered — re-ship
-            # its rows and replace its log entry
-            pairs_changed = sorted(
-                did
-                for did in (src_pairs & clone_pairs)
-                if clone_seq.get(did) != src_seq.get(did)
-            )
-            pairs_to_ship = sorted(
-                (src_pairs - clone_pairs) | set(pairs_changed)
-            )
-            shipped["pairs"] = pairs_to_ship
-            shipped["pairs_redelivered"] = pairs_changed
             for did in pairs_to_ship:
                 clone._unmark_landed(clone.landed_pairs_path, did)
                 # direct delete via the already-listed clone log —
                 # _unlog_pairs would re-list the whole log per did
                 if did in clone_seq:
                     dfs.delete(
-                        HPath(
-                            f"{clone.log_path}/"
-                            f"{clone_seq[did]:08d}.{did}"
-                        ),
+                        HPath(f"{clone.log_path}/{clone_seq[did]:08d}.{did}"),
                         False,
                     )
             if pairs_to_ship:
                 _ship("pairs", pairs_to_ship)
-            # log entries BEFORE the landed markers: a crash in
-            # between leaves an unmarked delta the re-run re-ships;
-            # the reverse order would leave a marked delta whose
-            # log entry never arrives
+            # log entries BEFORE the landed markers: a crash in between
+            # leaves an unmarked delta the re-run re-ships; the reverse
+            # order would leave a marked delta whose log entry never
+            # arrives
             for did in pairs_to_ship:
                 if did in src_seq:
                     dfs.create(
-                        HPath(
-                            f"{clone.log_path}/{src_seq[did]:08d}.{did}"
-                        ),
+                        HPath(f"{clone.log_path}/{src_seq[did]:08d}.{did}"),
                         True,
                     ).close()
             for did in pairs_to_ship:
@@ -1490,30 +1414,19 @@ class MinHashIndex(StoreKernel):
             clone._write_json(clone.log_hwm_path, hwm)
         for did in sorted(self._landed_ids(self.folded_path)):
             clone._mark_landed(clone.folded_path, did)
-        for did in sorted(src_expired):
-            clone._mark_landed(clone.expired_path, did)
-        fids = self._tombstone_fingerprints()
-        for fid in sorted(fids):
-            ids = self.spark.read.parquet(
-                f"{self.deleted_path}/forget_id={fid}"
-            ).select(self.TOMBSTONE_KEY)
-            clone.forget(ids, fid)
-        manifest = {
-            "source": self.base_path,
+        shipped = {
+            "index": idx_to_ship,
+            "index_redelivered": idx_changed,
+            "pairs": pairs_to_ship,
+            "pairs_redelivered": pairs_changed,
+        }
+        return shipped, {
             "index_deltas": sorted(src_idx),
             "index_delta_fps": cur_fps,
             "pairs_history": [
-                [s, d]
-                for s, d in sorted(self._log_entries().items())
-                if d in src_pairs
+                [s, d] for s, d in sorted(log.items()) if d in src_pairs
             ],
-            "tombstones_applied": [],
-            "tombstones_mirrored": sorted(fids),
-            "tombstone_fingerprints": fids,
-            "high_water": self.high_water(),
         }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {**manifest, "dest": dest, "shipped": shipped}
 
     def _pairs_read_schema(self):
         """The pinned pairs/ read schema incl. delta_id (the

@@ -14,10 +14,13 @@ test_component_store.py) and ran green unchanged across the move.
 
 Two layers:
 
-- `StoreKernel` — filesystem plumbing + the tombstone surface. A
-  subclass calls `_init_kernel(spark, base_path)` in its __init__ and
-  sets `TOMBSTONE_KEY` (the id column name) plus
-  `_tombstone_key_type()` (the pinned id type tombstones are cast to).
+- `StoreKernel` — filesystem plumbing, the tombstone surface and the
+  incremental-sync protocol (`sync_to`). A subclass calls
+  `_init_kernel(spark, base_path)` in its __init__ and sets
+  `TOMBSTONE_KEY` (the id column name) plus `_tombstone_key_type()`
+  (the pinned id type tombstones are cast to); a layout that syncs
+  supplies the sync hooks (`_sync_prepare`, `_sync_ship`, and the
+  retention pair when it keeps no `_expired.json` floor).
 - `BatchAppendStore(StoreKernel)` — the micro-batch-append layout the
   streaming index-maintenance sinks land into: `DATA_SUBDIR/`
   partitioned by (*CELL_COLS, batch_id) with intent/landed markers per
@@ -93,10 +96,10 @@ def _iter_files(fs, HPath, path: str):
 
 
 class StoreKernel:
-    """Filesystem plumbing + the right-to-be-forgotten surface shared
-    by every persisted store. Not a standalone store: subclasses own
-    their data layout, read views, and lifecycle; the kernel owns the
-    idioms those are built from."""
+    """Filesystem plumbing, the right-to-be-forgotten surface and the
+    incremental-sync protocol shared by every persisted store. Not a
+    standalone store: subclasses own their data layout, read views,
+    and lifecycle; the kernel owns the idioms those are built from."""
 
     # subclasses override: the id column tombstones are keyed by
     TOMBSTONE_KEY: str = "id"
@@ -520,6 +523,163 @@ class StoreKernel:
         elif fids:
             self._deleted_cache = _UNSET
         return cleared
+
+    # -- incremental sync (one protocol for every layout) ----------------------
+
+    def sync_to(self, dest_path: str) -> dict:
+        """INCREMENTAL backup: bring a previously-exported clone (a
+        completed `snapshot_to()`) up to date without re-exporting the
+        corpus. Runs under the SOURCE WriterLease, like snapshot_to.
+        The protocol is the same on every layout; the layout supplies
+        only what its units are (`_sync_prepare`, `_retention_ahead` /
+        `_carry_retention`, `_sync_ship`). Steps, in this order:
+
+        1. the clone must carry a snapshot attestation;
+        2. layout prepare: precheck and crash recovery on the source;
+        3. vacuum sweep of retired fold sources;
+        4. identity gate — the attestation must name THIS store as its
+           source (unit-id overlap alone is not an identity: batch ids
+           are small ints and "bootstrap" is a universal delta_id, so
+           a clone of an unrelated store would silently merge two
+           corpora — round-12 ADVICE, medium);
+        5. tombstone-narrowing gate (`_tombstone_narrowing_gate`);
+        6. retention gate — a clone whose retention is AHEAD of the
+           source's refuses: shipped units below its retention would be
+           dropped on arrival or resurrect retired data while the
+           manifest attested them as held. The reverse direction (the
+           source expired units the clone still holds) surfaces in the
+           ship step as foreign clone units;
+        7. layout ship — foreign-unit refusal and the layout's own
+           gates first, then the missing (or re-delivered) units land
+           masked through the CURRENT tombstones and are marked on the
+           clone only after their writes commit, so a crashed sync
+           leaves invisible partials the re-run replaces;
+        8. the source's retention record travels to the clone;
+        9. the source's standing tombstones are MIRRORED per forget_id
+           (idempotent-by-replacement, so retried syncs re-land them
+           harmlessly);
+        10. the attestation manifest is rewritten, always LAST.
+
+        Every refusal happens before step 7 writes anything: a refused
+        sync leaves the clone untouched.
+
+        Two honesty bounds, both consequences of the snapshot model:
+        shipped units carry no forgotten bytes, but rows forgotten on
+        the source AFTER the original snapshot already sit in the
+        clone's older units as bytes — the mirrored tombstones mask
+        them immediately and the clone's own purge erases them; a sync
+        is "compliance-masked now, byte-clean at the clone's next
+        purge", where a fresh snapshot is byte-clean at once.
+        Corollary: a source-side purge BEFORE a sync clears the very
+        tombstones the sync would have mirrored, so the clone keeps
+        serving rows the source already erased — syncs cannot
+        reconstruct an erasure whose id list is gone. This is the
+        standing takedown contract, not a sync special case: route
+        forgets through `forget_everywhere` with every live clone
+        listed (each clone then purges itself), or purge the source
+        only after its clones are synced.
+
+        Returns the new manifest plus `dest` and `shipped` — what
+        landed, keyed by unit kind. Cost: O(missing units) data +
+        O(|tombstones|) metadata — the steady-state nightly-backup
+        shape; snapshot_to is the full backup it increments."""
+        from .lease import WriterLease
+
+        with WriterLease(self.spark, self.base_path):
+            return self._sync_locked(dest_path)
+
+    def _sync_locked(self, dest_path: str) -> dict:
+        """sync_to's body; the CALLER holds this store's WriterLease
+        (sync_everywhere's quiesce mode holds the whole fleet's leases
+        for the sync window and calls this directly — the lease is not
+        re-entrant)."""
+        dest = dest_path.rstrip("/")
+        clone = self.__class__(self.spark, dest)
+        prior = clone.snapshot_manifest()
+        if prior is None:
+            raise RuntimeError(
+                f"sync_to(): {dest} has no snapshot attestation — sync "
+                "only updates a completed snapshot_to() clone; take a "
+                "full snapshot first"
+            )
+        self._sync_prepare()
+        self._vacuum_sweep()
+        self._deleted_cache = _UNSET  # re-list under the lease
+        recorded = prior.get("source")
+        if recorded != self.base_path:
+            raise RuntimeError(
+                f"sync_to(): the clone at {dest} was exported from "
+                f"{recorded!r}, not from {self.base_path} — syncing "
+                "into another store's clone would merge unrelated "
+                "corpora. Snapshot THIS store to a fresh path (or "
+                "sync from the recorded source)."
+            )
+        self._tombstone_narrowing_gate(prior, dest)
+        ahead = self._retention_ahead(clone)
+        if ahead:
+            raise RuntimeError(
+                f"sync_to(): the clone at {dest} {ahead} — its "
+                "retention is ahead, so shipped units would be "
+                "dropped on arrival or resurrect retired data "
+                "while the sync attested them as held. Expire the "
+                "source to the clone's boundary first, or take a "
+                "fresh snapshot."
+            )
+        shipped, fields = self._sync_ship(clone, prior)
+        self._carry_retention(clone)
+        fids = self._tombstone_fingerprints()
+        for fid in sorted(fids):
+            ids = self.spark.read.parquet(
+                f"{self.deleted_path}/forget_id={fid}"
+            ).select(self.TOMBSTONE_KEY)
+            clone.forget(ids, fid)
+        manifest = {
+            "source": self.base_path,
+            **fields,
+            "tombstones_applied": [],
+            "tombstones_mirrored": sorted(fids),
+            "tombstone_fingerprints": fids,
+            "high_water": self.high_water(),
+        }
+        clone._write_json(f"{dest}/_snapshot.json", manifest)
+        return {**manifest, "dest": dest, "shipped": shipped}
+
+    def _sync_prepare(self) -> None:
+        """Layout precheck + crash recovery on the source (under the
+        lease), run before any sync gate."""
+        raise NotImplementedError
+
+    def _sync_ship(self, clone, prior: dict) -> tuple[dict, dict]:
+        """Ship the units `clone` lacks; return (shipped by unit kind,
+        layout manifest fields). Refuses — before any write — a clone
+        holding units the source does not."""
+        raise NotImplementedError
+
+    def _retention_ahead(self, clone) -> str | None:
+        """Why `clone`'s retention is ahead of this store's, or None.
+        Default: the `_expired.json` floor of the layouts that keep one
+        at `expired_ledger_path` (a clone floor with no source floor,
+        or above it, is ahead)."""
+        src = self._read_json(self.expired_ledger_path)
+        have = clone._read_json(clone.expired_ledger_path)
+        src_floor = None if src is None else int(src["before"])
+        clone_floor = None if have is None else int(have["before"])
+        if clone_floor is None or (
+            src_floor is not None and clone_floor <= src_floor
+        ):
+            return None
+        return (
+            f"has a retention floor ({clone_floor}) ahead of the "
+            f"source's ({src_floor})"
+        )
+
+    def _carry_retention(self, clone) -> None:
+        """Write this store's retention record onto `clone` (the
+        ship step's foreign-unit refusal already proved the clone holds
+        nothing it retires). Default: the `_expired.json` floor."""
+        exp = self._read_json(self.expired_ledger_path)
+        if exp is not None:
+            clone._write_json(clone.expired_ledger_path, exp)
 
 
 class BatchAppendStore(StoreKernel):
@@ -1877,63 +2037,20 @@ class BatchAppendStore(StoreKernel):
             return None
         return self._partition_fingerprint(live)
 
-    def sync_to(self, dest_path: str) -> dict:
-        """INCREMENTAL backup: bring a previously-exported clone up to
-        date without re-exporting the corpus. Ships only the committed
-        batches the clone lacks (each through the clone's own
-        `append_batch`, so the landing is marker-gated and a crashed
-        sync re-runs to completion — missing batches are recomputed
-        from the diff, partially-landed ones replaced), MIRRORS the
-        source's standing tombstones onto the clone per forget_id
-        (idempotent-by-replacement, so retried syncs re-land them
-        harmlessly), refreshes the trained auxiliary relation, and
-        rewrites the manifest LAST with the new attested history.
-
-        Two honesty bounds, both documented consequences of the
-        snapshot model: newly-shipped batches are still exported
-        through the tombstone anti-join (no forgotten bytes travel in
-        the sync), but rows forgotten on the source AFTER the original
-        snapshot already sit in the clone's OLD batches as bytes — the
-        mirrored tombstones mask them immediately and the clone's own
-        `purge_forgotten()` erases them; a sync is therefore
-        "compliance-masked now, byte-clean at the clone's next purge",
-        where a fresh snapshot is byte-clean at once. Corollary: a
-        source-side purge_forgotten() BEFORE a sync clears the very
-        tombstones the sync would have mirrored, so the clone keeps
-        serving rows the source already erased — syncs cannot
-        reconstruct an erasure whose id list is gone. This is the
-        standing takedown contract, not a sync special case: route
-        forgets through `forget_everywhere` with every live clone
-        listed (each clone then purges itself), or purge the source
-        only after its clones are synced. And the clone
-        must genuinely be a clone: a destination without a snapshot
-        manifest, or with committed batches the source never had, is
-        refused — syncing into an unrelated store is not a defined
-        operation. Runs under the SOURCE WriterLease, like snapshot_to.
-
-        Cost: O(missing batches) data + O(|tombstones|) metadata — the
-        steady-state nightly-backup shape; snapshot_to is the full
-        backup it increments."""
-        from .lease import WriterLease
-        with WriterLease(self.spark, self.base_path):
-            return self._sync_locked(dest_path)
-
-    def _sync_locked(self, dest_path: str) -> dict:
-        """sync_to's body; the CALLER holds this store's
-        WriterLease (sync_everywhere's quiesce mode holds the whole
-        fleet's leases for the sync window and calls this directly —
-        the lease is not re-entrant)."""
-        dest = dest_path.rstrip("/")
-        clone = self.__class__(self.spark, dest)
-        if clone.snapshot_manifest() is None:
-            raise RuntimeError(
-                f"sync_to(): {dest} has no snapshot attestation — sync "
-                "only updates a completed snapshot_to() clone; take a "
-                "full snapshot first"
-            )
+    def _sync_prepare(self) -> None:
+        # roll a crashed retrain/compact forward and finish an expiry
         self._recover()
-        self._vacuum_sweep()
-        self._deleted_cache = _UNSET
+
+    def _sync_ship(self, clone, prior: dict) -> tuple[dict, dict]:
+        """Units are landed batch values. Each missing committed batch
+        ships through the clone's own `append_batch`, so the landing
+        is marker-gated and a crashed sync re-runs to completion
+        (missing batches are recomputed from the diff, partially-landed
+        ones replaced). No re-delivery detection is needed: a
+        redelivered batch re-lands the same deterministic rows under
+        its id, so a batch the clone holds is current; a retrain — the
+        one in-place rewrite — is caught by the geometry gate below."""
+        dest = clone.base_path
         # RAW landed values on both sides: the diff must see the
         # generation partitions themselves, not history()'s mapped
         # view — a source compact() since the snapshot shows up as
@@ -1941,49 +2058,6 @@ class BatchAppendStore(StoreKernel):
         # carries, and refuses below with the fresh-snapshot remedy
         hist = self._landed_batch_values()
         have = clone._landed_batch_values()
-        # identity gate FIRST: the manifest records which store the
-        # clone was exported from. A batch-id subset test alone is
-        # not an identity — batch ids are small sequential ints, so
-        # a clone of unrelated store B (batches [0]) passes the
-        # foreign check against any source, and for untrained
-        # stores the aux-fingerprint gate can't catch it either:
-        # the sync would silently merge two unrelated corpora
-        # (round-12 ADVICE, medium).
-        prior = clone.snapshot_manifest()
-        recorded = prior.get("source")
-        if recorded != self.base_path:
-            raise RuntimeError(
-                f"sync_to(): the clone at {dest} was exported from "
-                f"{recorded!r}, not from {self.base_path} — syncing "
-                "into another store's clone would merge unrelated "
-                "corpora. Snapshot THIS store to a fresh path (or "
-                "sync from the recorded source)."
-            )
-        self._tombstone_narrowing_gate(prior, dest)
-        # retention-floor gate (round-13 ADVICE, low): a clone whose
-        # `_expired.json` floor is AHEAD of the source's would silently
-        # re-drop every shipped batch below its floor (append_batch's
-        # redelivery refusal) while the manifest attested them as held
-        # — and every future sync would re-ship and re-drop them. The
-        # reverse direction is already covered: a SOURCE expire() ahead
-        # of the clone surfaces as foreign clone batches below.
-        src_exp = self._read_json(self.expired_ledger_path)
-        clone_exp = clone._read_json(clone.expired_ledger_path)
-        src_floor = int(src_exp["before"]) if src_exp is not None else None
-        clone_floor = (
-            int(clone_exp["before"]) if clone_exp is not None else None
-        )
-        if clone_floor is not None and (
-            src_floor is None or clone_floor > src_floor
-        ):
-            raise RuntimeError(
-                f"sync_to(): the clone at {dest} has a retention floor "
-                f"({clone_floor}) ahead of the source's "
-                f"({src_floor}) — batches the source still holds would "
-                "be silently dropped on arrival while the sync "
-                "attested them as shipped. Expire the source to the "
-                "clone's boundary first, or take a fresh snapshot."
-            )
         foreign = sorted(set(have) - set(hist))
         if foreign:
             raise RuntimeError(
@@ -2030,10 +2104,7 @@ class BatchAppendStore(StoreKernel):
             # cannot ship through append_batch (negative ids are
             # reserved), and shipping one without replaying the whole
             # fold protocol on the clone would leave a crash window
-            # serving the folded rows twice. Checked BEFORE any clone
-            # mutation below — a refused sync must leave the clone
-            # untouched (round-14 self-review: the schema sidecar
-            # write used to precede this).
+            # serving the folded rows twice
             raise RuntimeError(
                 f"sync_to(): the source {self.base_path} folded "
                 f"batches into generation(s) {neg} the clone at "
@@ -2092,14 +2163,10 @@ class BatchAppendStore(StoreKernel):
         schema_evolved = False
         if src_schema != clone_schema:
             src_types = {f.name: f.dataType for f in src_schema.fields}
-            clone_types = {
-                f.name: f.dataType for f in clone_schema.fields
-            }
-            additive = all(
-                n in src_types and src_types[n] == t
-                for n, t in clone_types.items()
-            )
-            if not additive:
+            if not all(
+                src_types.get(f.name) == f.dataType
+                for f in clone_schema.fields
+            ):
                 raise RuntimeError(
                     f"sync_to(): the clone at {dest} carries a "
                     "schema that is not an additive prefix of the "
@@ -2114,7 +2181,7 @@ class BatchAppendStore(StoreKernel):
         masked = self.read()
         for bid in missing:
             # pre-delete the clone's existing partitions for this
-            # batch (the MinHash _ship discipline): a PRIOR crashed
+            # batch (the MinHash ship discipline): a PRIOR crashed
             # sync attempt may have landed partial partitions, and
             # append_batch's dynamic overwrite only replaces the
             # partitions the NEW content writes — a cell whose
@@ -2127,17 +2194,10 @@ class BatchAppendStore(StoreKernel):
                 masked.filter(F.col("batch_id") == bid).drop("batch_id"),
                 bid,
             )
-        fids = self._tombstone_fingerprints()
-        for fid in sorted(fids):
-            ids = self.spark.read.parquet(
-                f"{self.deleted_path}/forget_id={fid}"
-            ).select(self.TOMBSTONE_KEY)
-            clone.forget(ids, fid)
         # no aux refresh: the geometry gate above just proved both
         # sides still sit on the fingerprinted generations, so the
         # clone's aux IS current by construction
-        manifest = {
-            "source": self.base_path,
+        return {"batches": missing}, {
             "batches": hist,
             # same meaning as snapshot_to's "rows": raw rows under
             # committed markers on the clone (a fresh clone holds
@@ -2147,18 +2207,8 @@ class BatchAppendStore(StoreKernel):
             # meanings depending on which writer last touched the
             # manifest (round-12 ADVICE, low)
             "rows": clone._data_read().count(),
-            "tombstones_applied": [],
-            "tombstones_mirrored": sorted(fids),
-            "tombstone_fingerprints": fids,
             "aux_fp_source": prior.get("aux_fp_source"),
             "aux_fp_clone": prior.get("aux_fp_clone"),
-            "high_water": self.high_water(),
-        }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {
-            **manifest,
-            "dest": dest,
-            "batches_shipped": missing,
             "schema_evolved": schema_evolved,
         }
 

@@ -376,7 +376,6 @@ def sync_everywhere(dest_root: str, *stores, quiesce: bool = False) -> dict:
             "shrink the set."
         )
     receipts = dict(catalog["stores"])
-    shipped: dict = {}
 
     if quiesce:
         from contextlib import ExitStack
@@ -398,11 +397,6 @@ def sync_everywhere(dest_root: str, *stores, quiesce: bool = False) -> dict:
             lambda store, name: store.sync_to(f"{root}/{name}"),
             receipts,
         )
-    for name, r in raw.items():
-        shipped[name] = r.get(
-            "batches_shipped",
-            r.get("patches_shipped", r.get("shipped")),
-        )
     catalog = {
         "dest_root": root,
         "stores": receipts,
@@ -410,7 +404,10 @@ def sync_everywhere(dest_root: str, *stores, quiesce: bool = False) -> dict:
         "skew": _batch_skew(receipts),
     }
     probe._write_json(f"{root}/_catalog.json", catalog)
-    return {**catalog, "shipped": shipped}
+    return {
+        **catalog,
+        "shipped": {name: r["shipped"] for name, r in raw.items()},
+    }
 
 
 def restore_everywhere(

@@ -928,7 +928,7 @@ def test_compact_then_snapshot_and_sync_semantics(spark, tmp_path):
     )
     store.append_batch(extra, 3)
     receipt = store.sync_to(dest)
-    assert receipt["batches_shipped"] == [3]
+    assert receipt["shipped"]["batches"] == [3]
     assert _ivf_rows(IvfAssignmentStore(spark, dest).read()) == _ivf_rows(
         store.read()
     )
@@ -1228,7 +1228,7 @@ def test_expire_travels_with_snapshot_and_gates_sync(spark, tmp_path):
         store.sync_to(dest_pre)
     # expire the clone to the source's boundary, then sync works
     IvfAssignmentStore(spark, dest_pre).expire(2)
-    assert store.sync_to(dest_pre)["batches_shipped"] == []
+    assert store.sync_to(dest_pre)["shipped"]["batches"] == []
     assert _ivf_rows(IvfAssignmentStore(spark, dest_pre).read()) == _ivf_rows(
         store.read()
     )
@@ -1243,3 +1243,23 @@ def test_expire_travels_with_snapshot_and_gates_sync(spark, tmp_path):
         ivf_assign(_emb(spark).filter(F.col("vec_id") < 200), cent), 0
     )
     assert _ivf_rows(clone.read()) == _ivf_rows(store.read())
+
+    # the floor travels with a sync too: a source expire() that drops
+    # nothing the clone holds still raises the clone's floor, so the
+    # clone refuses the same redeliveries as the source
+    store.append_batch(
+        ivf_assign(_emb(spark).filter(F.col("vec_id") < 200), cent), 5
+    )
+    store.expire(4)
+    dest_floor = str(tmp_path / "clone_floor")
+    store.snapshot_to(dest_floor)
+    store.expire(5)
+    assert store.sync_to(dest_floor)["shipped"]["batches"] == []
+    floor_clone = IvfAssignmentStore(spark, dest_floor)
+    assert floor_clone._read_json(floor_clone.expired_ledger_path) == (
+        store._read_json(store.expired_ledger_path)
+    )
+    floor_clone.append_batch(
+        ivf_assign(_emb(spark).filter(F.col("vec_id") < 200), cent), 4
+    )
+    assert floor_clone.history() == store.history() == [5]

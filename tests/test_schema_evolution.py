@@ -156,7 +156,7 @@ def test_evolved_sidecar_travels_with_snapshot_and_sync(spark, tmp_path):
     )
     receipt = store.sync_to(dest)
     assert receipt["schema_evolved"] is True
-    assert receipt["batches_shipped"] == [1]
+    assert receipt["shipped"]["batches"] == [1]
     clone = IvfAssignmentStore(spark, dest)
     assert "crawl_src" in clone.read().columns
     assert {

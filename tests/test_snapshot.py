@@ -314,7 +314,7 @@ def test_sync_ships_missing_batches_and_mirrors_takedowns(spark, tmp_path):
     )
 
     receipt = src.sync_to(dest)
-    assert receipt["batches_shipped"] == [1]
+    assert receipt["shipped"]["batches"] == [1]
     assert receipt["tombstones_mirrored"] == ["t9"]
     clone = IvfAssignmentStore(spark, dest)
     assert clone.history() == src.history() == [0, 1]
@@ -337,7 +337,7 @@ def test_sync_ships_missing_batches_and_mirrors_takedowns(spark, tmp_path):
     # the tombstoned rows; the re-mirrored tombstones re-mask only)
     before = _ivf_rows(IvfAssignmentStore(spark, dest).read())
     receipt2 = src.sync_to(dest)
-    assert receipt2["batches_shipped"] == []
+    assert receipt2["shipped"]["batches"] == []
     assert _ivf_rows(IvfAssignmentStore(spark, dest).read()) == before
 
     # refusals: not-a-clone destinations
@@ -351,6 +351,81 @@ def test_sync_ships_missing_batches_and_mirrors_takedowns(spark, tmp_path):
     )
     with pytest.raises(RuntimeError, match="diverged"):
         src.sync_to(dest)
+
+
+def _tree(root):
+    """{relative path: bytes} of every file under `root`."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("layout", ["ivf", "cc"])
+def test_refused_sync_leaves_clone_untouched(spark, tmp_path, layout):
+    """Every sync refusal fires before the ship step writes: a wrong
+    source, a clone whose retention is ahead and a foreign clone unit
+    each leave the clone's files (paths and bytes) exactly as they
+    were — while the source has a unit to ship."""
+    if layout == "ivf":
+        cent = ivf_centroids(spark, SF_DIR)
+
+        def rows(lo, hi):
+            return ivf_assign(
+                _emb(spark).filter(F.col("vec_id").between(lo, hi)), cent
+            )
+
+        src = IvfAssignmentStore(spark, str(tmp_path / "src"))
+        src.bootstrap(rows(0, 199))
+
+        def grow(store):
+            store.append_batch(rows(300, 399), 1)
+
+        def diverge(clone):
+            clone.append_batch(rows(0, 4), 9)
+
+        def retire(clone):
+            clone.expire(9)
+    else:
+
+        def pairs(*ps):
+            return spark.createDataFrame(list(ps), "da: bigint, db: bigint")
+
+        src = ComponentStore(spark, str(tmp_path / "src"))
+        src.bootstrap(pairs((1, 2), (2, 3)))
+
+        def grow(store):
+            store.apply_pairs(pairs((3, 4)), "d1")
+
+        def diverge(clone):
+            clone.apply_pairs(pairs((50, 51)), "x1")
+
+        def retire(clone):
+            clone.expire(clone.history()[-1][0])
+
+    dest, sibling = str(tmp_path / "clone"), str(tmp_path / "sibling")
+    src.snapshot_to(dest)
+    src.snapshot_to(sibling)
+    grow(src)
+    clone = type(src)(spark, dest)
+
+    def refused(store, match):
+        before = _tree(dest)
+        with pytest.raises(RuntimeError, match=match):
+            store.sync_to(dest)
+        assert _tree(dest) == before
+
+    # a sibling clone is a full store, but not the recorded source
+    refused(type(src)(spark, sibling), "was exported from")
+    diverge(clone)
+    refused(src, "diverged")
+    retire(clone)
+    refused(src, "retention floor")
 
 
 def test_purge_before_sync_is_the_documented_takedown_boundary(
@@ -432,7 +507,7 @@ def test_sync_crash_midway_rerun_completes(spark, tmp_path):
     )
 
     receipt = src.sync_to(dest)
-    assert receipt["batches_shipped"] == [2]
+    assert receipt["shipped"]["batches"] == [2]
     assert _ivf_rows(IvfAssignmentStore(spark, dest).read()) == _ivf_rows(
         src.read()
     )
@@ -457,14 +532,14 @@ def test_cc_sync_ships_patches_and_refuses_folded_history(spark, tmp_path):
     src.forget(spark.createDataFrame([(21,)], "node: bigint"), "t21")
 
     receipt = src.sync_to(dest)
-    assert [d for _, d in receipt["patches_shipped"]] == ["d2"]
+    assert [d for _, d in receipt["shipped"]["patches"]] == ["d2"]
     assert receipt["tombstones_mirrored"] == ["t11", "t21"]
     clone = ComponentStore(spark, dest)
     assert _labels(clone.labels()) == _labels(src.labels())
     assert clone.history() == src.history()
 
     receipt2 = src.sync_to(dest)
-    assert receipt2["patches_shipped"] == []
+    assert receipt2["shipped"]["patches"] == []
 
     src.compact()
     with pytest.raises(RuntimeError, match="fresh snapshot"):
@@ -672,7 +747,7 @@ def test_sync_legacy_manifests_upgrade_paths(spark, tmp_path):
         ),
         1,
     )
-    assert src.sync_to(dest)["batches_shipped"] == [1]
+    assert src.sync_to(dest)["shipped"]["batches"] == [1]
 
     # trained source, legacy manifest: refuse with the distinct reason
     src.retrain(_emb(spark).filter(F.col("vec_id") < 300), 1)
@@ -785,7 +860,7 @@ def test_sync_refuses_foreign_clone_same_batch_ids(spark, tmp_path):
         a.sync_to(dest)
     assert _ivf_rows(IvfAssignmentStore(spark, dest).read()) == before
     # the true source still syncs fine
-    assert b.sync_to(dest)["batches_shipped"] == []
+    assert b.sync_to(dest)["shipped"]["batches"] == []
 
     # same gate on the ComponentStore layout
     cc_a = _cc_source(spark, tmp_path)
@@ -859,7 +934,7 @@ def test_sync_reship_predeletes_crashed_batch_partitions(spark, tmp_path):
     src.forget(victims, "tcell")
 
     receipt = src.sync_to(dest)
-    assert receipt["batches_shipped"] == [1]
+    assert receipt["shipped"]["batches"] == [1]
     clone = IvfAssignmentStore(spark, dest)
     # the re-shipped batch is byte-clean: the emptied cell's stale
     # partition was pre-deleted, not left behind by dynamic overwrite
@@ -1070,8 +1145,8 @@ def test_sync_everywhere_updates_fleet_and_catalog_last(spark, tmp_path):
     # retry completes: ivf re-diffs to nothing, pq ships, catalog
     # refreshes with the new marks
     receipt = sync_everywhere(root, (ivf, "ivf"), (pq, "pq"))
-    assert receipt["shipped"]["ivf"] == []
-    assert receipt["shipped"]["pq"] == [2]
+    assert receipt["shipped"]["ivf"] == {"batches": []}
+    assert receipt["shipped"]["pq"] == {"batches": [2]}
     fresh = ivf._read_json(f"{root}/_catalog.json")
     assert fresh["stores"]["ivf"]["high_water"]["value"] == 2
     assert fresh["stores"]["pq"]["high_water"]["value"] == 2
@@ -1127,7 +1202,10 @@ def test_sync_everywhere_quiesced_marks_are_consistent(spark, tmp_path):
     receipt = sync_everywhere(root, (ivf, "ivf"), (pq, "pq"), quiesce=True)
     assert receipt["quiesced"] is True
     assert receipt["skew"] == {}
-    assert receipt["shipped"] == {"ivf": [2], "pq": [2]}
+    assert receipt["shipped"] == {
+        "ivf": {"batches": [2]},
+        "pq": {"batches": [2]},
+    }
     catalog = ivf._read_json(f"{root}/_catalog.json")
     assert catalog["stores"]["ivf"]["high_water"]["value"] == 2
     assert catalog["stores"]["pq"]["high_water"]["value"] == 2

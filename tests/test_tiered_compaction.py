@@ -257,7 +257,7 @@ def test_snapshot_and_sync_with_two_generations(spark, tmp_path):
         "vec_id", F.col("vec_id") + 700000
     )
     store.append_batch(extra, 4)
-    assert store.sync_to(dest)["batches_shipped"] == [4]
+    assert store.sync_to(dest)["shipped"]["batches"] == [4]
     assert {(r.vec_id, r.cent_id) for r in clone.read().collect()} == {
         (r.vec_id, r.cent_id) for r in store.read().collect()
     }
@@ -294,7 +294,7 @@ def test_sync_refuses_retention_ahead_clone(spark, tmp_path):
     # remedy: expire the source to the clone's boundary, then sync
     store.expire(2)
     receipt = store.sync_to(dest)
-    assert receipt["batches_shipped"] == []
+    assert receipt["shipped"]["batches"] == []
     assert {(r.vec_id, r.cent_id) for r in clone.read().collect()} == {
         (r.vec_id, r.cent_id) for r in store.read().collect()
     }
@@ -398,7 +398,7 @@ def test_pinned_snapshot_exports_as_of_batch(spark, tmp_path):
     }
 
     # incremental catch-up past the pin
-    assert store.sync_to(dest)["batches_shipped"] == [3]
+    assert store.sync_to(dest)["shipped"]["batches"] == [3]
     assert clone._landed_batch_values() == [0, 1, 2, 3]
 
 
@@ -747,7 +747,7 @@ def test_cc_snapshot_and_sync_travel_generations(spark, tmp_path):
     s.apply_pairs(_cc_edges(spark, [(50, 51)]), "d5")
     r2 = s.compact(merge_ratio=None)   # gen2@7 = [6,7]
     receipt = s.sync_to(dest)
-    shipped = {d for _, d in receipt["patches_shipped"]}
+    shipped = {d for _, d in receipt["shipped"]["patches"]}
     assert shipped == {r2["generation"]}
     clone = ComponentStore(spark, dest)
     assert [g["gid"] for g in clone._generations()] == [
@@ -756,7 +756,7 @@ def test_cc_snapshot_and_sync_travel_generations(spark, tmp_path):
     ]
     assert _cc_labels(clone) == _cc_labels(s)
     assert clone.history() == s.history()
-    assert s.sync_to(dest)["patches_shipped"] == []
+    assert s.sync_to(dest)["shipped"]["patches"] == []
 
     # a source fold that consumes patches the clone still HOLDS AS
     # PATCHES collapses shipped history: refuse, naming the remedy
