@@ -110,7 +110,6 @@ from .store_base import (
     StoreKernel,
     _UNSET,
     _iter_files,
-    observed_count,
 )
 
 # kept name: the byte bound below which tombstone sets broadcast
@@ -879,34 +878,6 @@ class ComponentStore(StoreKernel):
                         fs.delete(st.getPath(), True)
         return sorted(out)
 
-    def snapshot_to(self, dest_path: str) -> dict:
-        """Export a consistent, compliance-clean CLONE of the store to
-        a fresh path (the BatchAppendStore.snapshot_to contract on the
-        patch layout). What travels: every MARKED patch partition
-        verbatim-minus-tombstoned-node-rows (seq partitioning, markers,
-        and delta_ids preserved, so `labels(as_of_seq)` and `history()`
-        work on the clone) and the schema sidecar. What does not:
-        tombstoned nodes' BYTES (the export rewrites through the
-        tombstone anti-join — a clone of a store with standing
-        takedowns is byte-clean and starts with no tombstones), orphan
-        partitions of crashed applies, and stale intents. A forget()
-        landing on the source after the snapshot does not propagate:
-        clones are forks — list them in `forget_everywhere`.
-
-        Crash story: the schema sidecar is the clone's format marker
-        and is written only after markers land and a counted verify
-        passes, so a crash mid-export leaves a clone every read refuses
-        with 'rebootstrap required'; `_snapshot.json` (the completeness
-        attestation `snapshot_manifest()` returns) lands last. Recovery
-        is delete-and-retry (the destination must be fresh). Runs under
-        the SOURCE WriterLease so the export never captures a
-        half-landed apply or mid-compact state."""
-        from .lease import WriterLease
-
-        self._require_bootstrapped()
-        with WriterLease(self.spark, self.base_path):
-            return self._snapshot_locked(dest_path)
-
     def high_water(self) -> dict:
         """Last committed position (the highest marked patch seq or
         generation position — after a full fold the generation IS the
@@ -918,104 +889,38 @@ class ComponentStore(StoreKernel):
         ]
         return {"kind": "seq", "value": (max(vals) if vals else None)}
 
-    def _snapshot_locked(self, dest_path: str) -> dict:
-        """snapshot_to's body; the CALLER holds this store's
-        WriterLease (snapshot_everywhere's quiesce mode holds the
-        fleet's leases and calls this directly)."""
-        self._require_bootstrapped()
-        dest = dest_path.rstrip("/")
-        self._require_fresh_dest(dest)
-        clone = ComponentStore(self.spark, dest)
-        self._deleted_cache = _UNSET  # re-list under the lease
-        self._recover_fold()  # finish/undo a crashed compact() first
-        self._apply_expiry()  # sweep a crashed expire() first
-        self._vacuum_sweep()
+    def _snapshot_ship(self, clone, pin_batch) -> tuple:
+        """Units are committed positions. Marked patches travel as seq
+        partitions with their (seq, delta_id) markers, so
+        `labels(as_of_seq)` and `history()` work on the clone; orphan
+        partitions of crashed applies and stale intents stay behind.
+        Generations travel AS generations — rows into the clone's gens
+        relation, the ledger verbatim — so the clone keeps the same
+        VACUUM spans and the same provenance for sync's divergence
+        gates. The schema sidecar is the readable flip: until it lands,
+        every clone read refuses with 'rebootstrap'."""
+        self._refuse_pin(pin_batch)
         marked = self._marked()
         gens = self._generations()
-        fid_map = self._tombstone_fingerprints()
-        fids = sorted(fid_map)
-        rows = self._excl_deleted(self._patch_rows())
-        # one pass, not two: count the export on the write itself via
-        # an Observation instead of a separate rows.count() job (same
-        # single-pass change as the batch-store snapshot); read-back
-        # counts below still verify what landed
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        (
-            rows.observe(obs, F.count(F.lit(1)).alias("n"))
-            .hint("rebalance", "seq")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("seq")
-            .parquet(clone.assign_path)
+        rows = self._export_counted(
+            self._excl_deleted(self._patch_rows()),
+            clone.assign_path, ("seq",), self._read_schema(),
         )
-        expected = observed_count(obs)
-        # a fully-masked export writes no files; the dir must still
-        # exist so the clone's schema-pinned reads resolve as empty
-        dfs, DP = self._fs_for(clone.assign_path)
-        dfs.mkdirs(DP(clone.assign_path))
-        got = (
-            self.spark.read.schema(self._read_schema())
-            .parquet(clone.assign_path)
-            .count()
-        )
-        # generations travel AS generations — rows (tombstone-masked)
-        # into the clone's gens relation, the ledger verbatim — so the
-        # clone keeps the same VACUUM spans (`labels(as_of)` inside a
-        # folded range refuses on the clone exactly as on the source)
-        # and the same provenance for sync's divergence gates.
         if gens:
             grows = self._excl_deleted(self._gen_rows(gens)).select(
                 "node", "component", self._seq_to_gid(gens).alias("gid")
             )
-            gobs = Observation()
-            (
-                grows.observe(gobs, F.count(F.lit(1)).alias("n"))
-                .hint("rebalance", "gid")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "static")
-                .partitionBy("gid")
-                .parquet(clone.gens_path)
+            rows += self._export_counted(
+                grows, clone.gens_path, ("gid",), self._gid_read_schema()
             )
-            expected += observed_count(gobs)
-            clone._write_json(
-                clone.gens_ledger_path, {"generations": gens}
-            )
-            got += (
-                self.spark.read.schema(self._gid_read_schema())
-                .parquet(clone.gens_path)
-                .count()
-            )
-        if got != expected:
-            raise IOError(
-                f"snapshot row mismatch exporting {self.base_path} "
-                f"-> {dest}: expected {expected}, staged {got}; the "
-                "destination has no schema sidecar (unreadable) — "
-                "delete it and snapshot again"
-            )
+            clone._write_json(clone.gens_ledger_path, {"generations": gens})
         for seq, did in sorted(marked.items()):
             clone._mark(seq, did)
-        # the retention floor travels: the clone refuses the same
-        # as-of points and keeps the same earliest readable seq
-        exp = self._read_json(self.expired_ledger_path)
-        if exp is not None:
-            clone._write_json(clone.expired_ledger_path, exp)
-        clone._write_json(
-            clone.schema_path, self._read_schema().jsonValue()
-        )
-        manifest = {
-            "source": self.base_path,
-            "history": [[s, d] for s, d in self.history()],
-            "rows": got,
-            "tombstones_applied": fids,
-            "tombstone_fingerprints": fid_map,
-            "high_water": self.high_water(),
-        }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {**manifest, "dest": dest}
+        self._carry_retention(clone)
+        clone._write_json(clone.schema_path, self._read_schema().jsonValue())
+        return rows, {"history": [[s, d] for s, d in self.history()]}
 
-    def _sync_prepare(self) -> None:
+    def _lifecycle_prepare(self) -> None:
         self._require_bootstrapped()
         self._recover_fold()  # finish/undo a crashed compact() first
         self._apply_expiry()  # sweep a crashed expire() first

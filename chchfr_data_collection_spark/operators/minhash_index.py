@@ -145,7 +145,6 @@ from .store_base import (
     StoreKernel,
     _UNSET,
     _iter_files,
-    observed_count,
 )
 
 MH_P = (1 << 61) - 1
@@ -1025,40 +1024,6 @@ class MinHashIndex(StoreKernel):
 
     # -- lifecycle -------------------------------------------------------------
 
-    def snapshot_to(self, dest_path: str) -> dict:
-        """Export a consistent, compliance-clean CLONE of the index to
-        a fresh path (the BatchAppendStore.snapshot_to contract on the
-        MinHash layout). What travels: every MARKED delta partition of
-        arrays/ and postings/ and every landed pairs/ snapshot —
-        delta_id partitioning, landed markers, the pairs write log
-        (seq entries AND the high-water mark, so `history()` /
-        `pairs_as_of()` work on the clone and its future seqs never
-        collide with exported history), the `_folded` tombstones (a
-        late retry of a folded delta_id refuses on the clone exactly as
-        on the source), and the schema sidecars. What does not:
-        tombstoned docs' BYTES — arrays/postings rows are rewritten
-        through the doc_id anti-join and pairs rows are dropped when
-        EITHER endpoint is tombstoned (the compact(purge) masking), so
-        the clone is byte-clean and starts with no tombstones; unmarked
-        partitions (a mid-flight or crashed insert) are excluded as
-        fold sources would exclude them. Takedowns landing after the
-        snapshot do not propagate: clones are forks — list them in
-        `forget_everywhere`.
-
-        Refuses while a fold manifest is pending (compact() crashed or
-        running) — the honest answer for an export is 'recover first',
-        exactly as for pairs_as_of(). Crash story: the format marker is
-        written LAST-but-one, so a half-exported clone refuses every
-        read with 'rebootstrap required'; `_snapshot.json` (the
-        attestation `snapshot_manifest()` returns) lands last; recovery
-        is delete-and-retry. Runs under the SOURCE WriterLease so no
-        insert/compact mutates the export mid-copy."""
-        from .lease import WriterLease
-
-        self._require_format()
-        with WriterLease(self.spark, self.base_path):
-            return self._snapshot_locked(dest_path)
-
     def high_water(self) -> dict:
         """Last committed position (the pairs write log's highest
         seq) — the fleet-catalog skew mark (round-12 verdict, next
@@ -1069,52 +1034,39 @@ class MinHashIndex(StoreKernel):
             "value": (max(entries) if entries else None),
         }
 
-    def _snapshot_locked(self, dest_path: str) -> dict:
-        """snapshot_to's body; the CALLER holds this index's
-        WriterLease (snapshot_everywhere's quiesce mode holds the
-        fleet's leases and calls this directly)."""
-        self._require_format()
-        dest = dest_path.rstrip("/")
-        self._require_fresh_dest(dest)
-        clone = MinHashIndex(self.spark, dest)
-        if (
-            self._read_json(self.fold_commit_path) is not None
-            or self._read_json(self.fold_intent_path) is not None
-        ):
-            raise RuntimeError(
-                f"snapshot_to(): a fold manifest is pending on "
-                f"{self.base_path} (compact() crashed or is "
-                "running) — run compact() to recover, then retry."
-            )
-        self._deleted_cache = _UNSET  # re-list under the lease
-        self._recover_expiry()  # sweep a crashed expire() first
-        self._vacuum_sweep()
-        fid_map = self._tombstone_fingerprints()
-        fids = sorted(fid_map)
+    def _snapshot_ship(self, clone, pin_batch) -> tuple:
+        """Units are landed deltas. Every MARKED delta partition of
+        arrays/ and postings/ travels (doc_id rows masked) and every
+        landed pairs/ snapshot (rows dropped when EITHER endpoint is
+        tombstoned — the compact(purge) masking), with the landed
+        markers, the pairs write log (seq entries AND the high-water
+        mark, so `history()` / `pairs_as_of()` work on the clone and
+        its future seqs never collide with exported history), the
+        `_folded` markers (a late retry of a folded delta_id refuses on
+        the clone too) and the schema sidecars. Unmarked partitions (a
+        mid-flight or crashed insert) stay behind. The format marker is
+        the readable flip: until it lands, every clone read refuses
+        with 'Rebootstrap required'."""
+        self._refuse_pin(pin_batch)
         deleted, small = self._deleted_docs()
         if deleted is not None:
             deleted = deleted.persist()
         idx_marked = self._landed_ids(self.landed_path)
-        # markers and log entries travel for EVERY landed delta —
-        # a zero-row delta (an insert or probe whose masked output
-        # was empty writes no partition) still owns its marker and
-        # its log seq, and dropping them would fork the clone's
-        # history; only the DATA ship is restricted to deltas that
-        # actually have partitions
+        # markers and log entries travel for EVERY landed delta — a
+        # zero-row delta (an insert or probe whose masked output was
+        # empty writes no partition) still owns its marker and its log
+        # seq, and dropping them would fork the clone's history; only
+        # the DATA ship is restricted to deltas that have partitions
         pairs_marked = self._landed_ids(self.landed_pairs_path)
-        pairs_live = sorted(pairs_marked & self._partition_ids("pairs"))
         rows: dict = {}
+        dfs, HPath = self._fs_for(clone.base_path)
         try:
-            fs, HPath = self._fs()
-            dfs, _ = self._fs_for(dest)
             for rel in ("arrays", "postings", "pairs"):
                 if rel == "pairs":
-                    land = pairs_live
+                    land = sorted(pairs_marked & self._partition_ids(rel))
                     schema = self._pairs_read_schema()
                 else:
-                    land = sorted(
-                        idx_marked & self._partition_ids(rel)
-                    )
+                    land = sorted(idx_marked & self._partition_ids(rel))
                     schema = self._rel_schema(rel)
                 dst = clone._rel_path(rel)
                 if not land:
@@ -1126,47 +1078,15 @@ class MinHashIndex(StoreKernel):
                     .parquet(self._rel_path(rel))
                     .where(F.col("delta_id").isin(land))
                 )
-                df = self._mask_deleted(df, rel, deleted, small)
-                parts = (
-                    ("band", "delta_id")
-                    if rel == "postings"
-                    else ("delta_id",)
+                rows[rel] = self._export_counted(
+                    self._mask_deleted(df, rel, deleted, small),
+                    dst,
+                    ("band", "delta_id") if rel == "postings" else ("delta_id",),
+                    schema,
                 )
-                # one pass, not two: count the exported rows with an
-                # Observation ON the write instead of a separate
-                # `df.count()` job re-running the masked read; the
-                # read-back count below still verifies what landed
-                # (same single-pass change as the batch-store snapshot)
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                (
-                    df.observe(obs, F.count(F.lit(1)).alias("n"))
-                    .hint("rebalance", *parts)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "static")
-                    .partitionBy(*parts)
-                    .parquet(dst)
-                )
-                expected = observed_count(obs)
-                dfs.mkdirs(HPath(dst))
-                got = (
-                    self.spark.read.schema(schema).parquet(dst).count()
-                )
-                if got != expected:
-                    raise IOError(
-                        f"snapshot row mismatch exporting {rel} of "
-                        f"{self.base_path} -> {dest}: expected "
-                        f"{expected}, staged {got}; the destination "
-                        "has no format marker (unreadable) — delete "
-                        "it and snapshot again"
-                    )
-                rows[rel] = got
         finally:
             if deleted is not None:
                 deleted.unpersist()
-        # markers, write log, folded tombstones, sidecars — then the
-        # format marker flips the clone readable, manifest attests
         for did in sorted(idx_marked):
             clone._mark_landed(clone.landed_path, did)
         log = self._log_entries()
@@ -1182,20 +1102,14 @@ class MinHashIndex(StoreKernel):
             clone._write_json(clone.log_hwm_path, hwm)
         for did in sorted(self._landed_ids(self.folded_path)):
             clone._mark_landed(clone.folded_path, did)
-        # retention markers travel: the clone refuses the same retired
-        # re-inserts (expired deltas' DATA never travels — they are
-        # not landed)
-        for did in sorted(self._landed_ids(self.expired_path)):
-            clone._mark_landed(clone.expired_path, did)
+        self._carry_retention(clone)
         for rel in ("postings", "arrays"):
             clone._write_json(
                 clone.schema_paths[rel],
                 self._rel_schema(rel).jsonValue(),
             )
         clone._write_format_marker()
-        manifest = {
-            "source": self.base_path,
-            "rows": rows,
+        return rows, {
             "index_deltas": sorted(idx_marked),
             "index_delta_fps": {
                 did: self._index_delta_fp(did)
@@ -1204,12 +1118,7 @@ class MinHashIndex(StoreKernel):
             "pairs_history": [
                 [s, d] for s, d in sorted(log.items()) if d in pairs_marked
             ],
-            "tombstones_applied": fids,
-            "tombstone_fingerprints": fid_map,
-            "high_water": self.high_water(),
         }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {**manifest, "dest": dest}
 
     def _mask_deleted(self, df, rel: str, deleted, small: bool):
         """Anti-join tombstoned docs out of an export frame — pairs on
@@ -1244,14 +1153,17 @@ class MinHashIndex(StoreKernel):
                 )
         return sorted(out)
 
-    def _sync_prepare(self) -> None:
+    def _lifecycle_prepare(self) -> None:
+        """Refuses while a fold manifest is pending (compact() crashed
+        or running) — the honest answer for an export is 'recover
+        first', exactly as for pairs_as_of()."""
         self._require_format()
         if (
             self._read_json(self.fold_commit_path) is not None
             or self._read_json(self.fold_intent_path) is not None
         ):
             raise RuntimeError(
-                f"sync_to(): a fold manifest is pending on "
+                f"a fold manifest is pending on "
                 f"{self.base_path} (compact() crashed or is "
                 "running) — run compact() to recover, then retry."
             )

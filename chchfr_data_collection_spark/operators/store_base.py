@@ -15,12 +15,14 @@ test_component_store.py) and ran green unchanged across the move.
 Two layers:
 
 - `StoreKernel` — filesystem plumbing, the tombstone surface and the
-  incremental-sync protocol (`sync_to`). A subclass calls
+  two backup protocols: the full export (`snapshot_to`) and the
+  incremental sync (`sync_to`). A subclass calls
   `_init_kernel(spark, base_path)` in its __init__ and sets
   `TOMBSTONE_KEY` (the id column name) plus `_tombstone_key_type()`
-  (the pinned id type tombstones are cast to); a layout that syncs
-  supplies the sync hooks (`_sync_prepare`, `_sync_ship`, and the
-  retention pair when it keeps no `_expired.json` floor).
+  (the pinned id type tombstones are cast to); a layout that backs
+  itself up supplies the hooks (`_lifecycle_prepare`, shared by both
+  protocols, `_snapshot_ship`, `_sync_ship`, and the retention pair
+  when it keeps no `_expired.json` floor).
 - `BatchAppendStore(StoreKernel)` — the micro-batch-append layout the
   streaming index-maintenance sinks land into: `DATA_SUBDIR/`
   partitioned by (*CELL_COLS, batch_id) with intent/landed markers per
@@ -97,7 +99,8 @@ def _iter_files(fs, HPath, path: str):
 
 class StoreKernel:
     """Filesystem plumbing, the right-to-be-forgotten surface and the
-    incremental-sync protocol shared by every persisted store. Not a
+    snapshot and incremental-sync protocols shared by every persisted
+    store. Not a
     standalone store: subclasses own their data layout, read views,
     and lifecycle; the kernel owns the idioms those are built from."""
 
@@ -524,6 +527,150 @@ class StoreKernel:
             self._deleted_cache = _UNSET
         return cleared
 
+    # -- snapshot (one full-export protocol for every layout) ------------------
+
+    def snapshot_to(self, dest_path: str, pin_batch: int | None = None) -> dict:
+        """FULL backup: export a consistent, compliance-clean CLONE of
+        the store to a fresh path — the disaster-recovery / fork
+        surface. The protocol is the same on every layout; the layout
+        supplies only what its units are (`_lifecycle_prepare`,
+        `_snapshot_ship`, `_carry_retention`).
+
+        What travels: every COMMITTED unit (in-flight or crashed writes
+        are excluded exactly as reads exclude them) with its
+        partitioning, markers and write log, so history and time-travel
+        reads work on the clone, plus the layout's sidecars (trained
+        geometry, fold ledgers, schemas) and its retention record.
+        What does NOT travel: tombstoned rows' BYTES — every data
+        relation is rewritten through the tombstone anti-join, so a
+        clone of a store with standing takedowns is byte-clean (you
+        cannot back up data you were ordered to erase), and the clone
+        starts with no tombstones. A forget() landing on the source
+        after the snapshot does not propagate: clones are forks — list
+        them in `operators.takedown.forget_everywhere`, or `sync_to`
+        them.
+
+        Steps, in this order:
+
+        1. the destination must be fresh (`_require_fresh_dest`);
+        2. layout prepare: precheck and crash recovery on the source
+           (the hook sync runs too);
+        3. vacuum sweep of retired fold sources;
+        4. the tombstones are re-listed under the lease and their
+           fingerprints captured (the baseline of sync's narrowing
+           gate);
+        5. layout ship: the data relations are staged through
+           `_export_counted` (masked write, counted on the write
+           itself, verified against a read-back count), then the
+           retention record travels (`_carry_retention`), then the
+           layout's READABLE flip;
+        6. the `_snapshot.json` manifest, always LAST — the
+           completeness attestation (`snapshot_manifest()`; a restore
+           should require it).
+
+        Crash story: a crash before the readable flip leaves a clone
+        every read resolves empty or refuses; a crash after it and
+        before the manifest leaves a serving clone that visibly lacks
+        its attestation. Recovery is "delete the destination, snapshot
+        again": the destination must be fresh, so a retry never merges
+        into a failed attempt. Runs under the SOURCE WriterLease, so
+        the export never races a retrain/compact/purge into capturing
+        a half-migrated state. Cost: one masked scan + one write of
+        the committed data, plus a read-back count per relation.
+
+        `pin_batch=B` exports the store AS OF batch B — only committed
+        values at or below the pin travel (a generation travels only
+        when its WHOLE fold set is <= B; a pin falling inside one
+        refuses — fold boundaries bound the pinnable points, exactly
+        like as-of reads), and the manifest's `high_water` is the
+        highest pinned point that shipped. The pin is what makes a
+        CONSISTENT fleet snapshot possible WITHOUT quiescing: stores fed
+        by the same stream pin at the same coordinate while appends
+        beyond it continue (`snapshot_everywhere(pin_batches=True)`).
+        Only the batch layouts have that coordinate; the others refuse
+        a pin with ValueError before anything is written."""
+        from .lease import WriterLease
+
+        with WriterLease(self.spark, self.base_path):
+            return self._snapshot_locked(dest_path, pin_batch)
+
+    def _snapshot_locked(
+        self, dest_path: str, pin_batch: int | None = None
+    ) -> dict:
+        """snapshot_to's body; the CALLER holds this store's
+        WriterLease (snapshot_everywhere's quiesce mode holds the whole
+        fleet's leases for the export window and calls this directly —
+        the lease is not re-entrant)."""
+        dest = dest_path.rstrip("/")
+        self._require_fresh_dest(dest)
+        clone = self.__class__(self.spark, dest)
+        self._lifecycle_prepare()
+        self._vacuum_sweep()
+        self._deleted_cache = _UNSET  # re-list under the lease
+        fids = self._tombstone_fingerprints()
+        rows, fields = self._snapshot_ship(clone, pin_batch)
+        manifest = {
+            "source": self.base_path,
+            "rows": rows,
+            "tombstones_applied": sorted(fids),
+            "tombstone_fingerprints": fids,
+            # last committed position under the source lease — fleet
+            # catalogs record it so a restore can surface cross-store
+            # skew; a pinned export overrides it through `fields`
+            "high_water": self.high_water(),
+            **fields,
+        }
+        clone._write_json(f"{dest}/_snapshot.json", manifest)
+        return {**manifest, "dest": dest}
+
+    def _snapshot_ship(self, clone, pin_batch) -> tuple:
+        """Stage every committed unit on `clone` (data through
+        `_export_counted`), carry the retention record, then flip the
+        clone readable; return (rows, layout manifest fields)."""
+        raise NotImplementedError
+
+    def _export_counted(self, df: DataFrame, dst: str, parts, schema) -> int:
+        """Write one masked export relation to `dst` (static overwrite,
+        partitioned by `parts`) and return its row count, verified.
+        One pass: an Observation counts the rows on the write itself,
+        and a read-back count of what LANDED must match it — the gate
+        that makes a spurious empty observation fail loudly instead of
+        attesting an undercounted clone."""
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        (
+            df.observe(obs, F.count(F.lit(1)).alias("n"))
+            .hint("rebalance", *parts)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "static")
+            .partitionBy(*parts)
+            .parquet(dst)
+        )
+        expected = observed_count(obs)
+        # a fully-masked export writes no files; the dir must still
+        # exist so the clone's schema-pinned reads resolve as empty
+        fs, HPath = self._fs_for(dst)
+        fs.mkdirs(HPath(dst))
+        got = self.spark.read.schema(schema).parquet(dst).count()
+        if got != expected:
+            raise IOError(
+                f"snapshot row mismatch exporting {self.base_path} -> "
+                f"{dst}: expected {expected}, staged {got}; the clone "
+                "was never flipped readable — delete the destination "
+                "and snapshot again"
+            )
+        return got
+
+    def _refuse_pin(self, pin_batch) -> None:
+        """The snapshot pin of the layouts on store-local coordinates."""
+        if pin_batch is not None:
+            raise ValueError(
+                f"snapshot_to(pin_batch={pin_batch}): {self.base_path} "
+                "has no batch coordinate to pin at — only the batch "
+                "layouts do. Snapshot it unpinned."
+            )
+
     # -- incremental sync (one protocol for every layout) ----------------------
 
     def sync_to(self, dest_path: str) -> dict:
@@ -531,8 +678,9 @@ class StoreKernel:
         completed `snapshot_to()`) up to date without re-exporting the
         corpus. Runs under the SOURCE WriterLease, like snapshot_to.
         The protocol is the same on every layout; the layout supplies
-        only what its units are (`_sync_prepare`, `_retention_ahead` /
-        `_carry_retention`, `_sync_ship`). Steps, in this order:
+        only what its units are (`_lifecycle_prepare`,
+        `_retention_ahead` / `_carry_retention`, `_sync_ship`). Steps,
+        in this order:
 
         1. the clone must carry a snapshot attestation;
         2. layout prepare: precheck and crash recovery on the source;
@@ -602,7 +750,7 @@ class StoreKernel:
                 "only updates a completed snapshot_to() clone; take a "
                 "full snapshot first"
             )
-        self._sync_prepare()
+        self._lifecycle_prepare()
         self._vacuum_sweep()
         self._deleted_cache = _UNSET  # re-list under the lease
         recorded = prior.get("source")
@@ -644,9 +792,9 @@ class StoreKernel:
         clone._write_json(f"{dest}/_snapshot.json", manifest)
         return {**manifest, "dest": dest, "shipped": shipped}
 
-    def _sync_prepare(self) -> None:
+    def _lifecycle_prepare(self) -> None:
         """Layout precheck + crash recovery on the source (under the
-        lease), run before any sync gate."""
+        lease), run before any snapshot or sync step touches data."""
         raise NotImplementedError
 
     def _sync_ship(self, clone, prior: dict) -> tuple[dict, dict]:
@@ -674,9 +822,11 @@ class StoreKernel:
         )
 
     def _carry_retention(self, clone) -> None:
-        """Write this store's retention record onto `clone` (the
-        ship step's foreign-unit refusal already proved the clone holds
-        nothing it retires). Default: the `_expired.json` floor."""
+        """Write this store's retention record onto `clone` — the one
+        writer of a clone's retention record, for snapshot and sync
+        alike (on sync, the ship step's foreign-unit refusal already
+        proved the clone holds nothing it retires). Default: the
+        `_expired.json` floor."""
         exp = self._read_json(self.expired_ledger_path)
         if exp is not None:
             clone._write_json(clone.expired_ledger_path, exp)
@@ -1781,53 +1931,6 @@ class BatchAppendStore(StoreKernel):
             expired = self._apply_expiry()
             return {"expired": expired, "before": before}
 
-    def snapshot_to(self, dest_path: str, pin_batch: int | None = None) -> dict:
-        """Export a consistent, compliance-clean CLONE of the store to
-        a fresh path — the disaster-recovery / fork surface on the
-        batch-store layout.
-
-        What travels: every COMMITTED batch (in-flight/crashed appends
-        are excluded exactly as reads exclude them), the (*CELL_COLS,
-        batch_id) partitioning (probe pruning and time travel work on
-        the clone), and the trained auxiliary relation (`_aux_swap()`'s
-        live side — centroids / codebook) so the clone serves and
-        appends under the same geometry. What does NOT travel:
-        tombstoned rows' BYTES — the export rewrites the data through
-        the tombstone anti-join, so a clone of a store with standing
-        takedowns is clean at the byte level (you cannot "back up" data
-        you were ordered to erase), and the clone starts with no
-        tombstones. A forget() landing on the source AFTER the snapshot
-        does not propagate: clones are forks — route takedowns through
-        `operators.takedown.forget_everywhere` with every live clone
-        listed.
-
-        Crash story (the store discipline, applied to the export):
-        intent markers for every batch land at the destination FIRST,
-        so a crash mid-copy leaves a clone whose reads resolve EMPTY;
-        the landed markers flip only after a counted verify of the
-        staged rows; the `_snapshot.json` manifest is written LAST and
-        is the completeness attestation (`snapshot_manifest()` — a
-        restore should require it). Recovery from a failed attempt is
-        "delete the destination, snapshot again" (the destination must
-        be fresh). Runs under the SOURCE WriterLease: a snapshot never
-        races a retrain/purge into capturing a half-migrated state.
-        Cost: one masked scan + one write of the committed data, plus
-        a count on each side for the verify.
-
-        `pin_batch=B` exports the store AS OF batch B — only committed
-        values at or below the pin travel (a generation travels only
-        when its WHOLE fold set is <= B; a pin falling inside one
-        refuses — fold boundaries bound the pinnable points, exactly
-        like as-of reads). The pin is what makes a CONSISTENT fleet
-        snapshot possible WITHOUT quiescing: stores fed by the same
-        stream pin at the same coordinate while appends beyond it
-        continue (round-13 verdict, missing #3;
-        `snapshot_everywhere(pin_batches=True)`)."""
-        from .lease import WriterLease
-
-        with WriterLease(self.spark, self.base_path):
-            return self._snapshot_locked(dest_path, pin_batch=pin_batch)
-
     def high_water(self) -> dict:
         """The store's last-committed position, in its own coordinate
         system — what a fleet backup catalog records per store so a
@@ -1838,24 +1941,16 @@ class BatchAppendStore(StoreKernel):
         hist = self.history()
         return {"kind": "batch", "value": (hist[-1] if hist else None)}
 
-    def _snapshot_locked(
-        self, dest_path: str, pin_batch: int | None = None
-    ) -> dict:
-        """snapshot_to's body; the CALLER holds this store's
-        WriterLease (snapshot_everywhere's quiesce mode holds the whole
-        fleet's leases for the export window and calls this directly —
-        the lease is not re-entrant, so the public wrapper cannot be
-        used there)."""
-        dest = dest_path.rstrip("/")
-        self._require_fresh_dest(dest)
-        clone = self.__class__(self.spark, dest)
-        self._recover()  # roll a crashed maintenance swap forward
-        self._vacuum_sweep()
-        self._deleted_cache = _UNSET  # re-list under the lease
-        # RAW landed values: after a compact the write log includes
-        # the negative generation value, which the export must
-        # carry verbatim (history()'s mapped view would exclude
-        # the generation's rows from the isin pin below)
+    def _snapshot_ship(self, clone, pin_batch) -> tuple:
+        """Units are RAW landed batch values: after a compact the write
+        log includes the negative generation values, which travel
+        verbatim (history()'s mapped view would drop the generations'
+        rows). Alongside the data travel the trained auxiliary relation
+        (`_aux_swap()`'s live side), the fold ledger (trimmed to the
+        shipped generations under a pin) and the evolved-schema
+        sidecar. Intent markers for every exported batch land FIRST, so
+        the half-staged clone reads EMPTY; the landed markers are the
+        readable flip."""
         hist = self._landed_batch_values()
         if not hist:
             raise RuntimeError(
@@ -1895,67 +1990,33 @@ class BatchAppendStore(StoreKernel):
                     f"{self.base_path}"
                 )
             hist = sel
-        fid_map = self._tombstone_fingerprints()
-        fids = sorted(fid_map)
-        # pin the export to the batch set listed above: a
-        # CONCURRENT unfenced append (or a redelivery of a crashed
-        # batch) landing partitions mid-scan must not leak rows
-        # into the clone — on the clone they would carry no intent
-        # marker and therefore be VISIBLE under a batch the clone
-        # never committed. The ComponentStore/MinHash exports pin
-        # their partition lists the same way (isin(marked)).
+        # pin the export to the batch set listed above: a CONCURRENT
+        # unfenced append (or a redelivery of a crashed batch) landing
+        # partitions mid-scan must not leak rows into the clone — on
+        # the clone they would carry no intent marker and therefore be
+        # VISIBLE under a batch the clone never committed
         masked = self.read().filter(
             F.col("batch_id").isin([int(b) for b in hist])
         )
         for b in hist:
             clone._mark_landed(clone.intent_path, str(b))
-        # One pass instead of two: the export used to run the masked
-        # read TWICE — once for `expected = masked.count()`, once for
-        # the write (guide §1.2: don't compute things you throw away).
-        # An Observation on the write counts the exported rows in the
-        # same job; the read-back count below still verifies that what
-        # LANDED is complete and readable, which is the failure mode
-        # this check exists for.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        (
-            self._rebalanced(masked.observe(obs, F.count(F.lit(1)).alias("n")))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(*self.CELL_COLS, "batch_id")
-            .parquet(clone.data_path)
+        rows = self._export_counted(
+            masked, clone.data_path, (*self.CELL_COLS, "batch_id"),
+            self.data_schema(),
         )
-        expected = observed_count(obs)
-        # a fully-masked export writes no files; the dir must still
-        # exist so the clone's schema-pinned reads resolve as empty
-        dfs, DP = self._fs_for(clone.data_path)
-        dfs.mkdirs(DP(clone.data_path))
-        got = (
-            self.spark.read.schema(self.data_schema())
-            .parquet(clone.data_path)
-            .count()
-        )
-        if got != expected:
-            raise IOError(
-                f"snapshot row mismatch exporting {self.base_path} "
-                f"-> {dest}: expected {expected}, staged {got}; the "
-                "destination is incomplete (no landed markers) — "
-                "delete it and snapshot again"
-            )
         aux = self._aux_swap()
         if aux is not None:
             live = aux[1]
             sfs, SP = self._fs()
             if sfs.exists(SP(live)):
                 rel = live[len(self.base_path) + 1:]
-                self._copy_tree(live, f"{dest}/{rel}")
-        # the fold ledger travels: the clone must refuse as-of
-        # reads inside the folded prefix and drop redeliveries of
-        # folded batches, exactly like the source. A PINNED export
-        # carries a TRIMMED ledger — only the generations that
-        # shipped (a redelivery of a beyond-pin folded batch is a
-        # legitimate new batch on the fork)
+                self._copy_tree(live, f"{clone.base_path}/{rel}")
+        # the fold ledger travels: the clone must refuse as-of reads
+        # inside the folded prefix and drop redeliveries of folded
+        # batches, exactly like the source. A PINNED export carries a
+        # TRIMMED ledger — only the generations that shipped (a
+        # redelivery of a beyond-pin folded batch is a legitimate new
+        # batch on the fork)
         led = self._read_json(self.folded_ledger_path)
         if led is not None and pinned_gens is not None:
             if pinned_gens:
@@ -1973,56 +2034,40 @@ class BatchAppendStore(StoreKernel):
                 led = None
         if led is not None:
             clone._write_json(clone.folded_ledger_path, led)
-        # the evolved-schema sidecar travels: the clone's append
-        # guard must validate producers against the schema the
-        # exported rows carry
+        # the evolved-schema sidecar travels: the clone's append guard
+        # must validate producers against the schema the exported rows
+        # carry
         sch = self._read_json(self.schema_sidecar_path)
         if sch is not None:
             clone._write_json(clone.schema_sidecar_path, sch)
-        # the retention floor travels: the clone refuses the same
-        # expired redeliveries and as-of points as the source
-        exp = self._read_json(self.expired_ledger_path)
-        if exp is not None:
-            clone._write_json(clone.expired_ledger_path, exp)
+        self._carry_retention(clone)
         for b in hist:
             clone._mark_landed(clone.landed_path, str(b))
             clone._unmark_landed(clone.intent_path, str(b))
-        if pinned_gens is None:
-            hw = self.high_water()
-        else:
+        fields = {
+            "batches": hist,
+            "pin_batch": None if pin_batch is None else int(pin_batch),
+            # geometry generation stamps: sync_to refuses when either
+            # side's trained aux (centroids/codebook) moved since this
+            # export — a retrain migrates EVERY landed row, so shipping
+            # pre/post-retrain batches across generations would mix
+            # geometries silently
+            "aux_fp_source": self._aux_live_fp(),
+            "aux_fp_clone": clone._aux_live_fp(),
+        }
+        if pinned_gens is not None:
             # the pinned export's position is the highest committed
-            # point that SHIPPED — on a common-pin fleet snapshot
-            # every batch store records the same value, so the
-            # catalog's skew check proves the set single-point
+            # point that SHIPPED — on a common-pin fleet snapshot every
+            # batch store records the same value, so the catalog's
+            # skew check proves the set single-point
             gens_by_id = {g["gen"]: g for g in pinned_gens}
-            hw = {
+            fields["high_water"] = {
                 "kind": "batch",
                 "value": max(
                     (gens_by_id[v]["upto"] if v < 0 else v) for v in hist
                 ),
             }
-        manifest = {
-            "source": self.base_path,
-            "batches": hist,
-            "rows": got,
-            "tombstones_applied": fids,
-            "tombstone_fingerprints": fid_map,
-            # last committed position under the source lease — fleet
-            # catalogs record this so a restore can surface cross-store
-            # skew (round-12 verdict, next #3). For a pinned export:
-            # the pinned point (see above)
-            "high_water": hw,
-            "pin_batch": None if pin_batch is None else int(pin_batch),
-            # geometry generation stamps: sync_to refuses when
-            # either side's trained aux (centroids/codebook) moved
-            # since this export — a retrain migrates EVERY landed
-            # row, so shipping pre/post-retrain batches across
-            # generations would mix geometries silently
-            "aux_fp_source": self._aux_live_fp(),
-            "aux_fp_clone": clone._aux_live_fp(),
-        }
-        clone._write_json(f"{dest}/_snapshot.json", manifest)
-        return {**manifest, "dest": dest}
+        return rows, fields
 
     def _aux_live_fp(self):
         """Content fingerprint of the live auxiliary relation (trained
@@ -2037,7 +2082,7 @@ class BatchAppendStore(StoreKernel):
             return None
         return self._partition_fingerprint(live)
 
-    def _sync_prepare(self) -> None:
+    def _lifecycle_prepare(self) -> None:
         # roll a crashed retrain/compact forward and finish an expiry
         self._recover()
 

@@ -249,6 +249,8 @@ def snapshot_everywhere(
     own moment as before — their marks were never cross-comparable.
     The catalog's `skew` over the pinned marks is {} by construction;
     mutually exclusive with `quiesce` (pick one mechanism)."""
+    from contextlib import ExitStack
+
     from .lease import WriterLease
 
     if not stores:
@@ -280,26 +282,19 @@ def snapshot_everywhere(
         pin = min(batch_marks)
 
     def _export(store, name):
-        if pin is not None and store.high_water().get("kind") == "batch":
-            return store.snapshot_to(f"{root}/{name}", pin_batch=pin)
-        return store.snapshot_to(f"{root}/{name}")
+        # quiesce holds every lease itself; the lease is not re-entrant
+        snap = store._snapshot_locked if quiesce else store.snapshot_to
+        if pin is not None and marks[name].get("kind") == "batch":
+            return snap(f"{root}/{name}", pin_batch=pin)
+        return snap(f"{root}/{name}")
 
-    if quiesce:
-        from contextlib import ExitStack
-
-        # one lease per distinct store path (the same store may be
-        # exported under two names); sorted order prevents deadlock
-        # against another quiescing coordinator
-        paths = sorted({store.base_path for store, _ in stores})
-        with ExitStack() as stack:
-            for p in paths:
+    with ExitStack() as stack:
+        if quiesce:
+            # one lease per distinct store path (the same store may be
+            # exported under two names); sorted order prevents deadlock
+            # against another quiescing coordinator
+            for p in sorted({store.base_path for store, _ in stores}):
                 stack.enter_context(WriterLease(stores[0][0].spark, p))
-            _fan_out_stores(
-                stores,
-                lambda store, name: store._snapshot_locked(f"{root}/{name}"),
-                receipts,
-            )
-    else:
         _fan_out_stores(stores, _export, receipts)
     catalog = {
         "dest_root": root,
