@@ -67,28 +67,34 @@ any maintenance call".
 Correctness of the incremental fold (the dedup_cc_incremental
 argument, now load-bearing for the store): landed components are
 labeled by their MINIMUM node id, so every contracted vertex is a real
-node id minimal in its landed part; star-contraction CC over the
-contracted delta graph therefore yields the true minimum of each
-merged component, and components the delta never touches keep their
-labels because no patch row names them. The fixed point after any
-sequence of apply() calls equals batch CC over the union of all pairs
-ever applied — which is the registered oracle — with one carve-out:
-pairs are SEVERED at endpoints tombstoned at apply time (forgotten
-nodes never bridge components; the surviving endpoint still enters as
-a singleton), so under takedowns the fixed point is batch CC over the
-union of the per-apply SEVERED pair batches.
+node id minimal in its landed part; a union-find over the
+contracted delta graph that always unions toward the smaller id (one
+local pass on the driver — `graph.local_components`) therefore yields
+the true minimum of each merged component, and components the delta
+never touches keep their labels because no patch row names them. The
+fixed point after any sequence of apply() calls equals batch CC over
+the union of all pairs ever applied — which is the registered oracle —
+with one carve-out: pairs are SEVERED at endpoints tombstoned at
+apply time (forgotten nodes never bridge components; the surviving
+endpoint still enters as a singleton), so under takedowns the fixed
+point is batch CC over the union of the per-apply SEVERED pair
+batches.
 
 At 100 TB: `labels()` (the serving read) is one shuffle on node over
 base + patches (steady-state patches are delta-sized; compact() folds
 them back into one base, keeping the resolve cheap). `apply_pairs` is
 stricter — nothing in it shuffles the corpus assignment: endpoint
-labels resolve through a broadcast semi-join + delta-sized groupBy,
-CC runs on the contracted O(delta + touched components) graph, and
-the relabel of touched components is a MAP-ONLY scan of the
-assignment against a broadcast (old label -> new label) map — sound
-because labels only ever decrease, so stale patch rows can never
-match a current label (see _apply_pairs_locked). The one full pass
-apply pays is that map-side scan; its shuffle volume is zero.
+labels resolve through a broadcast semi-join + delta-sized groupBy;
+the severed delta pairs and those labels come to the driver, where
+CC runs on the contracted O(delta + touched components) graph in one
+union-find pass (the scale contract is in `apply_pairs`); and the
+relabel of touched components is a MAP-ONLY scan of the assignment
+against a broadcast (old label -> new label) map — sound because
+labels only ever decrease, so stale patch rows can never match a
+current label (see _apply_pairs_locked). The one full pass apply
+pays is that map-side scan; its shuffle volume is zero. The
+corpus-sized graphs (`bootstrap`, batch dedup CC) keep the
+distributed star contraction in operators/graph.py.
 
 Concurrent WRITERS on one store need the WriterLease fence
 (operators/lease.py), exactly as for the MinHash index; forget() is
@@ -104,7 +110,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .graph import connected_components, materialize
+from .graph import connected_components, local_components
 from .store_base import (
     TOMBSTONE_BROADCAST_BYTES,
     StoreKernel,
@@ -541,22 +547,19 @@ class ComponentStore(StoreKernel):
         # `hint("rebalance", "seq")` keyed on a CONSTANT funnelled every
         # row through one shuffle partition AND taxed tiny sf-scale
         # patches with a whole extra shuffle (driver-measured 0.70x on
-        # the CC entries; this round's A/B: keyed +0.3 s, keyless
-        # +0.7 s per apply at sf0.1 while the un-hinted write already
-        # landed 2-6 AQE-coalesced files). The fan-out risk the hint
-        # guarded against is many PRODUCER tasks each writing a
-        # few-row file — so gate on the producer partition count:
-        # small patches write as-is; a patch produced by a wide scan
-        # (the 100 TB case) rebalances KEYLESS, letting AQE size
-        # partitions instead of funnelling through the constant key.
-        # The gate is NOT free: under AQE, `.rdd.getNumPartitions()`
-        # resolves the adaptive final plan, which runs every exchange
-        # in the patch as a real job (the write below is a fresh
-        # query and runs them again), and it returns the
-        # post-coalesce partition count, not a pre-AQE upper bound.
+        # the CC entries; keyed +0.3 s, keyless +0.7 s per apply at
+        # sf0.1). The fan-out risk the hint guards against is many
+        # PRODUCER tasks each writing a few-row file, so the gate asks
+        # how many file splits the patch's scans span: small patches
+        # write as-is; a patch produced by a scan wider than the
+        # cluster's cores (the 100 TB case) rebalances KEYLESS, letting
+        # AQE size partitions. The answer comes from optimized-plan
+        # statistics and runs no job. Only file-scan leaves count: a
+        # join's estimate is a cartesian product (it would fire on every
+        # small store), and local or checkpointed relations (the
+        # first-seen rows, a bootstrap's CC output) are not file splits.
         out = patch.withColumn("seq", F.lit(f"{seq:08d}"))
-        cap = self.spark.sparkContext.defaultParallelism
-        if out.rdd.getNumPartitions() > cap:
+        if self._scan_splits(patch) > self.spark.sparkContext.defaultParallelism:
             out = out.hint("rebalance")
         (
             out.write.mode("overwrite")
@@ -567,6 +570,19 @@ class ComponentStore(StoreKernel):
         self._mark(seq, delta_id)
         fs.delete(HPath(f"{self.intent_path}/{delta_id}"), False)
         return seq
+
+    def _scan_splits(self, df: DataFrame) -> float:
+        """File splits `df`'s parquet scans span: their optimized-plan
+        `sizeInBytes` over `spark.sql.files.maxPartitionBytes`."""
+        plan = df._jdf.queryExecution().optimizedPlan()
+        leaves = plan.collectLeaves()
+        size = 0
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.nodeName() == "LogicalRelation":
+                size += int(leaf.stats().sizeInBytes())
+        conf = self.spark._jsparkSession.sessionState().conf()
+        return size / conf.filesMaxPartitionBytes()
 
     def bootstrap(
         self, pairs: DataFrame, src: str = "da", dst: str = "db"
@@ -615,8 +631,8 @@ class ComponentStore(StoreKernel):
         """Fold a delta batch's near-dup pairs into the assignment —
         the dedup_cc_incremental algorithm, landed as a crash-safe
         PATCH write instead of returned: contract the delta pairs
-        through the current labels, run star-contraction CC on the
-        contracted (delta-sized) graph, and write only the rows whose
+        through the current labels, solve the contracted (delta-sized)
+        graph with one local union-find, and write only the rows whose
         label changed plus first-seen nodes. Idempotent under replay
         (an already-applied delta computes an empty patch — still
         landed, so the marker records the delivery) and safe to retry
@@ -636,7 +652,16 @@ class ComponentStore(StoreKernel):
         the fold's generation seq, and last-writer-wins would silently
         discard its relabels. The lease serializes the two (and any
         two concurrent appliers — same fence as every non-transactional
-        writer in this repo); forget() alone stays lock-free."""
+        writer in this repo); forget() alone stays lock-free.
+
+        Scale contract: a delta's severed pairs and its endpoints'
+        labels must fit on the driver, which a foreachBatch micro-batch
+        does by construction; an oversized collect fails loudly at
+        `spark.driver.maxResultSize`. Apply a backfill in chunks — the
+        merge is chunking-insensitive, so the result does not depend on
+        how it was cut. The store-sized work (sever, endpoint resolve,
+        relabel scan, patch write) stays in Spark, and the corpus-sized
+        `bootstrap` runs the distributed star contraction."""
         from .lease import WriterLease
 
         self._require_bootstrapped()
@@ -650,7 +675,10 @@ class ComponentStore(StoreKernel):
         # corpus assignment is never resolved corpus-wide here — labels
         # are resolved ONLY for the delta's endpoints (broadcast
         # semi-join into the marked partitions, then a delta-sized
-        # groupBy), and the relabel of touched components is a MAP-ONLY
+        # groupBy) and collected beside the delta pairs; CC runs on the
+        # driver over the contracted graph, so no job runs between that
+        # collect and the patch write; the relabel of touched components
+        # is a MAP-ONLY
         # scan of the assignment against a broadcast (old label -> new
         # label) map. The label-match is sound because labels only ever
         # DECREASE (components merge toward their minimum id): a node's
@@ -696,63 +724,77 @@ class ComponentStore(StoreKernel):
                     ).select("da", F.col("da").alias("db"))
                 )
             )
-        dp = materialize(dp, None, "", eager=True)
-        nodes = (
-            dp.select(F.col("da").alias("node"))
-            .unionByName(dp.select(F.col("db").alias("node")))
-            .distinct()
+        # the severed delta and its endpoints' current labels come to
+        # the driver (the scale contract in apply_pairs' docstring);
+        # everything store-sized stays a Spark query. A null endpoint
+        # is no node: its pair keeps the other side as a self-pair.
+        base = self._read_schema()
+        node_t, comp_t = base["node"].dataType, base["component"].dataType
+        got = (
+            dp.select(
+                F.coalesce("da", "db").cast(node_t).alias("da"),
+                F.coalesce("db", "da").cast(node_t).alias("db"),
+            )
+            .where(F.col("da").isNotNull())
+            .toArrow()
         )
+        pairs = list(zip(got.column("da").to_pylist(), got.column("db").to_pylist()))
+        ends = list({x for pair in pairs for x in pair})
         assign = self._assign_marked()
         # no _excl_deleted here: tombstoned ids cannot be endpoints
         # after the sever, so the anti-join would be dead weight — and
         # excluding them from the RESOLVE was exactly the bug (a
         # tombstoned endpoint contracting as a raw vertex).
-        labels_sub = (
-            assign.join(F.broadcast(nodes), "node", "left_semi")
+        res = (
+            assign.join(F.broadcast(self._local(node=(ends, node_t))), "node", "left_semi")
             .groupBy("node")
             .agg(F.max_by("component", "seq").alias("component"))
-        ).persist()
-        try:
-            la = labels_sub.select(
-                F.col("node").alias("da"), F.col("component").alias("ca")
-            )
-            lb = labels_sub.select(
-                F.col("node").alias("db"), F.col("component").alias("cb")
-            )
-            contracted = (
-                dp.join(la, "da", "left")
-                .join(lb, "db", "left")
-                .select(
-                    F.coalesce("ca", F.col("da")).alias("da"),
-                    F.coalesce("cb", F.col("db")).alias("db"),
-                )
-            )
-            cc2 = materialize(
-                connected_components(contracted), None, "", eager=True
-            )
-            # current labels touched by the delta, and where they move
-            changed_map = cc2.select(
-                F.col("node").alias("component"), F.col("component").alias("newc")
-            ).where(F.col("newc") != F.col("component"))
+            .toArrow()
+        )
+        label = dict(
+            zip(res.column("node").to_pylist(), res.column("component").to_pylist())
+        )
+        # contract each endpoint to its current label and solve the
+        # contracted graph in one local pass (module docstring: the
+        # roots are the true minima of the merged components)
+        root = local_components(
+            (label.get(a, a), label.get(b, b)) for a, b in pairs
+        )
+        # a contracted vertex is landed iff it arrived via a label;
+        # every other vertex is a first-seen delta node
+        reps = set(label.values())
+        fresh = [(v, r) for v, r in root.items() if v not in reps]
+        patch = self._local(
+            node=([v for v, _ in fresh], node_t),
+            component=([r for _, r in fresh], comp_t),
+        )
+        moved = [(v, r) for v, r in root.items() if r != v]
+        if moved:
             # map-only relabel scan: every row whose CURRENT label is in
             # the map emits its new assignment (stale rows can't match —
             # see above); tombstoned nodes' rows relabel too, staying
             # read-masked
+            changed_map = self._local(
+                component=([v for v, _ in moved], comp_t),
+                newc=([r for _, r in moved], comp_t),
+            )
             changed = assign.join(F.broadcast(changed_map), "component").select(
                 "node", F.col("newc").alias("component")
             )
-            # a contracted vertex is landed iff it arrived via a label
-            # (it is some labels_sub component); everything else in cc2
-            # is a first-seen delta node
-            reps = (
-                labels_sub.select(F.col("component").alias("node")).distinct()
-            )
-            fresh = cc2.join(F.broadcast(reps), "node", "left_anti").select(
-                "node", "component"
-            )
-            return self._land_patch(changed.unionByName(fresh), delta_id)
-        finally:
-            labels_sub.unpersist()
+            patch = changed.unionByName(patch)
+        return self._land_patch(patch, delta_id)
+
+    def _local(self, **cols) -> DataFrame:
+        """A driver-built LocalRelation, each column given as (values,
+        Spark type) — the store's pinned types, never a guessed int64.
+        Broadcastable, with plan statistics, and no job to build."""
+        import pyarrow as pa
+        from pyspark.sql.types import StructField, StructType
+
+        schema = StructType([StructField(n, t) for n, (_, t) in cols.items()])
+        return self.spark.createDataFrame(
+            pa.table({n: v for n, (v, _) in cols.items()}), schema
+        )
 
     # -- lifecycle -----------------------------------------------------------
 

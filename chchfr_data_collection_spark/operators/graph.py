@@ -59,9 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def materialize(
-    df: DataFrame, checkpoint_dir: str | None, slot: str, eager: bool = False
-) -> DataFrame:
+def materialize(df: DataFrame, checkpoint_dir: str | None, slot: str) -> DataFrame:
     """Cut an iterative operator's lineage: `localCheckpoint()` when
     `checkpoint_dir` is None (fast, executor-local blocks — lost with
     the executor), else a parquet round-trip under
@@ -69,23 +67,43 @@ def materialize(
     loss replays from the files). Callers alternate two slot names so
     a write never overwrites the files its own input is reading.
 
-    The local checkpoint is LAZY by default (round 16, guide §2.6):
-    the caller's next action — the CC loop's convergence check, a
-    broadcast build, a write — materializes the blocks as part of its
-    own job, instead of a dedicated checkpoint job per round followed
-    by a second job that re-reads the blocks. Lineage is truncated at
-    first materialization exactly as before; values are unchanged.
-    Pass `eager=True` when the relation's FIRST use fans out into
-    several concurrent consumers (a broadcast build racing a scan, a
-    self-union) AND its upstream is expensive: racing consumers each
-    recompute the upstream until blocks land, which round-16
-    measurement showed costing more than the dedicated checkpoint job
-    saves (the ComponentStore apply path's dp/cc2)."""
+    The local checkpoint is LAZY (round 16, guide §2.6): the caller's
+    next action — the CC loop's convergence check, a broadcast build, a
+    write — materializes the blocks as part of its own job, instead of
+    a dedicated checkpoint job per round followed by a second job that
+    re-reads the blocks. Lineage is truncated at first materialization
+    exactly as before; values are unchanged. A relation whose first use
+    fans out into several concurrent consumers over an expensive
+    upstream wants `df.localCheckpoint(eager=True)` instead (the
+    pinned sites in queries/scale_ops.py)."""
     if checkpoint_dir is None:
-        return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint(eager=False)
     path = f"{checkpoint_dir.rstrip('/')}/{slot}"
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
+
+
+def local_components(edges) -> dict:
+    """Driver-side twin of `connected_components` for a graph that fits
+    in driver memory: {node: component} over an iterable of (a, b)
+    pairs, component = the minimum node id, exactly what star
+    contraction returns. Union-find with path halving and union toward
+    the smaller id, so every root IS its component's minimum. A
+    self-pair registers a singleton."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 def _large_star(e: DataFrame) -> DataFrame:

@@ -499,3 +499,28 @@ def test_seq_space_exhaustion_raises(spark, tmp_path):
     # the failed attempt reserved nothing and landed nothing
     store.apply_pairs(_edges(spark, [(500, 501)]), "dz2")
     assert (500, 500) in _labels(store.labels())
+
+
+def test_chain_delta_applies_in_few_jobs(spark, tmp_path):
+    """A delta whose contracted graph is a 64-node chain bridging three
+    landed components (plus a landed self-pair and a first-seen
+    singleton) resolves to batch CC over the union, and the apply runs
+    a bounded number of Spark jobs: the contracted graph is solved in
+    one local pass, so no job is spent per contraction round or on
+    sizing the patch."""
+    landed = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)]
+    chain = [3] + list(range(1000, 1030)) + [10] + list(range(1030, 1061)) + [21]
+    assert len(chain) == 64
+    delta = list(zip(chain, chain[1:])) + [(2, 2), (900, 900)]
+    store = ComponentStore(spark, str(tmp_path / "cs"))
+    store.bootstrap(_edges(spark, landed))
+    sc = spark.sparkContext
+    group = f"cs-apply-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "chain delta apply")
+    try:
+        store.apply_pairs(_edges(spark, delta), "d1")
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert _labels(store.labels()) == _batch_cc(spark, landed + delta)
+    assert len(jobs) <= 8, f"apply ran {len(jobs)} Spark jobs"

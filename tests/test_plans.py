@@ -377,11 +377,13 @@ def test_r11_store_plan_shapes(spark, sf_small, cat, tmp_path):
       end — the tombstone anti-join, the query-cell join, and the query
       vector fetch all broadcast; no cartesian anywhere.
     - ComponentStore.apply_pairs: the landed PATCH plan (captured just
-      before the write) relabels touched components through a
-      BroadcastHashJoin over the assignment scan — the map-only
-      contract; no cartesian. The corpus assignment must never be
-      re-resolved corpus-wide inside apply: the only groupBy over the
-      assignment is the endpoint-restricted (semi-joined) resolve."""
+      before the write) is map-only — exactly one join, the
+      BroadcastHashJoin that relabels touched components over the
+      assignment scan, beside the driver-built first-seen rows; no
+      shuffle Exchange and no cartesian. The corpus assignment is never
+      re-resolved corpus-wide inside apply: the only groupBy over it is
+      the endpoint-restricted (semi-joined) resolve, which runs before
+      the patch is built."""
     from pyspark.sql import functions as F
 
     from chchfr_data_collection_spark.operators.component_store import (
@@ -412,6 +414,72 @@ def test_r11_store_plan_shapes(spark, sf_small, cat, tmp_path):
     )
     patch = captured["patch"]
     assert count_nodes(patch, "CartesianProduct") == 0
-    assert count_nodes(patch, "BroadcastHashJoin") >= 2, (
-        "relabel/fresh joins are not broadcast-driven"
+    joins = sum(
+        count_nodes(patch, j)
+        for j in (
+            "BroadcastHashJoin",
+            "BroadcastNestedLoopJoin",
+            "SortMergeJoin",
+            "ShuffledHashJoin",
+        )
     )
+    assert joins == 1 and count_nodes(patch, "BroadcastHashJoin") == 1, (
+        "the patch's only join must be the broadcast relabel"
+    )
+    assert count_nodes(patch, "Exchange") == 0, "the patch plan shuffles"
+
+
+def _written_patch(spark, tmp_path, name, delta):
+    """Bootstrap a small store, apply `delta`, and return the frame
+    `_land_patch` handed to the parquet writer."""
+    from chchfr_data_collection_spark.operators.component_store import (
+        ComponentStore,
+    )
+
+    store = ComponentStore(spark, str(tmp_path / name))
+    store.bootstrap(
+        spark.createDataFrame(
+            [(1, 2), (2, 3), (5, 6), (10, 11)], "da: bigint, db: bigint"
+        )
+    )
+    written = []
+    real_land = store._land_patch
+
+    def capture(patch, delta_id):
+        cls = type(patch)
+        real_write = cls.write
+        cls.write = property(lambda df: written.append(df) or real_write.fget(df))
+        try:
+            return real_land(patch, delta_id)
+        finally:
+            cls.write = real_write
+
+    store._land_patch = capture
+    store.apply_pairs(
+        spark.createDataFrame(delta, "da: bigint, db: bigint"), "d1"
+    )
+    assert len(written) == 1
+    return written[0]
+
+
+def test_patch_rebalance_gate_fires_on_wide_scan(spark, tmp_path):
+    """The keyless rebalance on the patch write is gated on how many
+    file splits the relabel scan spans, read from plan statistics: a
+    store whose assignment scan spans more splits than
+    defaultParallelism rebalances; a store that fits in one split
+    writes as-is."""
+
+    def rebalanced(df):
+        return "RebalancePartitions" in df._jdf.queryExecution().analyzed().toString()
+
+    delta = [(3, 4), (6, 10)]
+    assert not rebalanced(_written_patch(spark, tmp_path, "narrow", delta))
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    # about 4 splits per core over the ~1 KB bootstrap files
+    spark.conf.set(key, str(max(1, 1024 // (4 * spark.sparkContext.defaultParallelism))))
+    try:
+        assert rebalanced(_written_patch(spark, tmp_path, "wide", delta))
+    finally:
+        spark.conf.set(key, old)

@@ -120,6 +120,8 @@ import os as _os
 
 MODEL = settings(
     max_examples=int(_os.environ.get("SPARK_GRAFT_MODEL_EXAMPLES", "10")),
+    # the same examples every run, so suite time and failures reproduce
+    derandomize=True,
     deadline=None,
     suppress_health_check=[
         HealthCheck.function_scoped_fixture,
