@@ -92,9 +92,7 @@ relabel of touched components is a MAP-ONLY scan of the assignment
 against a broadcast (old label -> new label) map — sound because
 labels only ever decrease, so stale patch rows can never match a
 current label (see _apply_pairs_locked). The one full pass apply
-pays is that map-side scan; its shuffle volume is zero. The
-corpus-sized graphs (`bootstrap`, batch dedup CC) keep the
-distributed star contraction in operators/graph.py.
+pays is that map-side scan; its shuffle volume is zero.
 
 Concurrent WRITERS on one store need the WriterLease fence
 (operators/lease.py), exactly as for the MinHash index; forget() is
@@ -542,22 +540,19 @@ class ComponentStore(StoreKernel):
                 "seq growth bounded; this store never was."
             )
         self._write_json(f"{self.intent_path}/{delta_id}", {"seq": seq})
-        # SIZE-GATED rebalance-on-write (guide §6 "coalesce on write",
-        # round-15 verdict what's-wrong #1): the unconditional
-        # `hint("rebalance", "seq")` keyed on a CONSTANT funnelled every
-        # row through one shuffle partition AND taxed tiny sf-scale
-        # patches with a whole extra shuffle (driver-measured 0.70x on
-        # the CC entries; keyed +0.3 s, keyless +0.7 s per apply at
-        # sf0.1). The fan-out risk the hint guards against is many
-        # PRODUCER tasks each writing a few-row file, so the gate asks
-        # how many file splits the patch's scans span: small patches
-        # write as-is; a patch produced by a scan wider than the
-        # cluster's cores (the 100 TB case) rebalances KEYLESS, letting
-        # AQE size partitions. The answer comes from optimized-plan
-        # statistics and runs no job. Only file-scan leaves count: a
-        # join's estimate is a cartesian product (it would fire on every
-        # small store), and local or checkpointed relations (the
-        # first-seen rows, a bootstrap's CC output) are not file splits.
+        # SIZE-GATED rebalance-on-write (guide §6 "coalesce on write"):
+        # a rebalance costs small sf-scale patches a whole extra shuffle
+        # (+0.3-0.7 s per apply at sf0.1), and the fan-out risk it
+        # guards against is many PRODUCER tasks each writing a few-row
+        # file. So the gate asks how many file splits the patch's scans
+        # span: small patches write as-is; a patch produced by a scan
+        # wider than the cluster's cores (the 100 TB case) rebalances
+        # KEYLESS, letting AQE size partitions. The answer comes from
+        # optimized-plan statistics and runs no job. Only file-scan
+        # leaves count: a join's estimate is a cartesian product (it
+        # would fire on every small store), and local or checkpointed
+        # relations (the first-seen rows, a bootstrap's CC output) are
+        # not file splits.
         out = patch.withColumn("seq", F.lit(f"{seq:08d}"))
         if self._scan_splits(patch) > self.spark.sparkContext.defaultParallelism:
             out = out.hint("rebalance")
@@ -678,9 +673,8 @@ class ComponentStore(StoreKernel):
         # groupBy) and collected beside the delta pairs; CC runs on the
         # driver over the contracted graph, so no job runs between that
         # collect and the patch write; the relabel of touched components
-        # is a MAP-ONLY
-        # scan of the assignment against a broadcast (old label -> new
-        # label) map. The label-match is sound because labels only ever
+        # is a MAP-ONLY scan of the assignment against a broadcast (old
+        # label -> new label) map. The label-match is sound because labels only ever
         # DECREASE (components merge toward their minimum id): a node's
         # stale patch rows carry strictly larger, no-longer-current
         # labels, and the map's keys are current labels — so exactly
@@ -724,10 +718,8 @@ class ComponentStore(StoreKernel):
                     ).select("da", F.col("da").alias("db"))
                 )
             )
-        # the severed delta and its endpoints' current labels come to
-        # the driver (the scale contract in apply_pairs' docstring);
-        # everything store-sized stays a Spark query. A null endpoint
-        # is no node: its pair keeps the other side as a self-pair.
+        # a null endpoint is no node: its pair keeps the other side as
+        # a self-pair
         base = self._read_schema()
         node_t, comp_t = base["node"].dataType, base["component"].dataType
         got = (
@@ -738,15 +730,18 @@ class ComponentStore(StoreKernel):
             .where(F.col("da").isNotNull())
             .toArrow()
         )
-        pairs = list(zip(got.column("da").to_pylist(), got.column("db").to_pylist()))
+        pairs = list(
+            zip(got.column("da").to_pylist(), got.column("db").to_pylist())
+        )
         ends = list({x for pair in pairs for x in pair})
         assign = self._assign_marked()
         # no _excl_deleted here: tombstoned ids cannot be endpoints
         # after the sever, so the anti-join would be dead weight — and
         # excluding them from the RESOLVE was exactly the bug (a
         # tombstoned endpoint contracting as a raw vertex).
+        ends_df = self._local(node=(ends, node_t))
         res = (
-            assign.join(F.broadcast(self._local(node=(ends, node_t))), "node", "left_semi")
+            assign.join(F.broadcast(ends_df), "node", "left_semi")
             .groupBy("node")
             .agg(F.max_by("component", "seq").alias("component"))
             .toArrow()

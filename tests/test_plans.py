@@ -478,8 +478,9 @@ def test_patch_rebalance_gate_fires_on_wide_scan(spark, tmp_path):
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key)
     # about 4 splits per core over the ~1 KB bootstrap files
-    spark.conf.set(key, str(max(1, 1024 // (4 * spark.sparkContext.defaultParallelism))))
+    split = max(1, 1024 // (4 * spark.sparkContext.defaultParallelism))
     try:
+        spark.conf.set(key, str(split))
         assert rebalanced(_written_patch(spark, tmp_path, "wide", delta))
     finally:
         spark.conf.set(key, old)
